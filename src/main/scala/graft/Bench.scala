@@ -141,21 +141,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Production read pattern: pairs tables are written once and read
-      // by their derived queries (q29/q42). The invalidate() in
-      // runOnce keeps the OWNER queries honestly measured.
-      .config(ops.PipelineCache.ConfKey, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // The pipeline cache is the production read pattern: pairs tables
+    // are written once and read by their derived queries (q29/q42). The
+    // invalidate() in runOnce keeps the OWNER queries honestly measured.
+    val spark = Mains.session(Mains.querySettings(Mains.cpus()))
     spark.sparkContext.setLogLevel("WARN")
 
     def runOnce(name: String,

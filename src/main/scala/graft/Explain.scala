@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan audit: `runMain graft.Explain q85_… [q88_… …]` prints each
   * named query's formatted physical plan (AQE initial plan) on
   * `SPARK_GRAFT_SF_DIR` (default sf0.001) — the `.explain` loop the
@@ -11,14 +9,8 @@ object Explain {
     require(args.nonEmpty, "usage: Explain <query_name> [more…]")
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Mains.session(Mains.settings("4") +
+      ("spark.sql.extensions" -> "graft.plans.GraftExtensions"))
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { name =>
       println(s"==== $name ====")

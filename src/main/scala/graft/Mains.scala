@@ -5,21 +5,47 @@ import org.apache.spark.sql.SparkSession
 /** Operational entry points — the reference ships two cron scripts
   * (`extract_script.py <job>` every 10 min, `load_warehouse.py`
   * hourly); these mains are their runnable equivalents plus the
-  * streaming upgrade. Session settings match Verify/Bench (UTC, local
-  * parallelism from SPARK_GRAFT_CPUS, nanos-as-long for the harness
-  * parquet).
+  * streaming upgrade.
+  *
+  * Also the one owner of Spark session settings, the way the
+  * reference's two scripts share one `config.ini`: every main and the
+  * test base build their session from [[settings]] or
+  * [[querySettings]] plus only what is their own. The ticks here thus
+  * share Verify's and Bench's base settings, and Bench, MicroBench,
+  * PlanProbe and Verify share one query engine, by construction.
   */
 object Mains {
-  private[graft] def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-  }
+  /** Local parallelism: `SPARK_GRAFT_CPUS`, else `default`. */
+  def cpus(default: String =
+      Runtime.getRuntime.availableProcessors().toString): String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", default)
+
+  /** The shared base: local parallelism, UTC, nanos-as-long for the
+    * harness parquet, no UI. */
+  def settings(cpus: String): Map[String, String] = Map(
+    "spark.master" -> s"local[$cpus]",
+    "spark.sql.shuffle.partitions" -> cpus,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.ui.enabled" -> "false")
+
+  /** The query engine: graft's optimizer rules, AQE and the pipeline
+    * cache — one definition, so an isolated re-measurement can never
+    * time a different configuration from the suite it checks. */
+  def querySettings(cpus: String): Map[String, String] = settings(cpus) ++ Map(
+    "spark.sql.extensions" -> "graft.plans.GraftExtensions",
+    "spark.sql.adaptive.enabled" -> "true",
+    ops.PipelineCache.ConfKey -> "true")
+
+  /** The one place a session is built: `conf` is [[settings]] or
+    * [[querySettings]] plus only what is the caller's own. */
+  private[graft] def session(conf: Map[String, String]): SparkSession =
+    SparkSession.builder().config(conf).getOrCreate()
+
+  /** The ticks' session; `SPARK_MASTER` points them at a cluster. */
+  private[graft] def session(): SparkSession =
+    session(settings(cpus()) ++
+      sys.env.get("SPARK_MASTER").map("spark.master" -> _))
 }
 
 /** One extract tick: `runMain graft.ExtractTick <configDir> <jobName>`.

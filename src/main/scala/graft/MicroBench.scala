@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Focused per-query re-measurement: `runMain graft.MicroBench q52_…
   * [q01_… …]` times ONLY the named queries (default n=7 measured runs
   * after a warm-up pass; `SPARK_GRAFT_MICRO_N` overrides) on
@@ -24,8 +22,6 @@ object MicroBench {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: MicroBench <query_name> [more…]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     val n = sys.env.getOrElse("SPARK_GRAFT_MICRO_N", "7").toInt
     require(n >= 1, s"SPARK_GRAFT_MICRO_N must be ≥ 1, got $n")
     // SPARK_GRAFT_MICRO_WARMUP=0 skips the warm-up pass: for the
@@ -33,26 +29,8 @@ object MicroBench {
     // clock to amortize codegen/JIT costs that are <1% of a 20-minute
     // run. Default 1 (warm-up on) — sub-second queries NEED it.
     val warm = sys.env.getOrElse("SPARK_GRAFT_MICRO_WARMUP", "1").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      // BENCH PARITY (round-12 fix): Bench and Verify run with the
-      // pipeline cache ON; MicroBench historically did not, so a
-      // multi-referenced subtree (q99's hx ×3, q52's cluster frames)
-      // recomputed per reference and an "isolated re-measurement" of
-      // an in-suite delta silently compared two different engine
-      // configurations — q99 measured 23.5 s isolated vs 2.8 s
-      // in-suite on identical code and an only-1.45× host. The
-      // invalidate() in once() still forces every run to REBUILD its
-      // entries, so nothing is timed warm; the flag only stops
-      // within-run recomputation, exactly as in Bench.
-      .config(ops.PipelineCache.ConfKey, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Mains.cpus()
+    val spark = Mains.session(Mains.querySettings(cpus))
     spark.sparkContext.setLogLevel("ERROR")
     def once(name: String): Double = {
       ops.PipelineCache.invalidate(spark, name)

@@ -35,13 +35,7 @@ object PlanGolden {
     shapes.map { case (n, s) => s"$n\t$s" }.mkString("", "\n", "\n")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Mains.session(Mains.settings("4"))
     spark.sparkContext.setLogLevel("WARN")
     val out = render(computeAll(spark, DataDir))
     Files.writeString(Paths.get(GoldenPath), out)

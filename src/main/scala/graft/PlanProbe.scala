@@ -135,18 +135,7 @@ object PlanProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: PlanProbe <query_name>|ALL [more…]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config(ops.PipelineCache.ConfKey, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Mains.session(Mains.querySettings(Mains.cpus()))
     spark.sparkContext.setLogLevel("ERROR")
 
     val all = args.contains("ALL")

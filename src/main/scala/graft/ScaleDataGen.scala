@@ -314,16 +314,9 @@ object ScaleDataGen {
     require(args.length == 2, "usage: ScaleDataGen <sf> <outDir>")
     val sf = args(0).toDouble
     val outDir = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = Mains.session(Mains.settings(Mains.cpus()) +
       // match the driver files' arrow flavor (timestamp[us])
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      ("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"))
     spark.sparkContext.setLogLevel("WARN")
     writeAll(spark, sf, outDir)
     spark.stop()

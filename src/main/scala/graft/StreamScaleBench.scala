@@ -332,19 +332,12 @@ object StreamScaleBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/repo/scratch/sfg1.0")
     val outPath = args.drop(1).headOption.getOrElse("STREAM_SCALE.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Mains.cpus()
+    val spark = Mains.session(Mains.settings(cpus) ++ Map(
+      "spark.sql.extensions" -> "graft.plans.GraftExtensions",
+      "spark.sql.streaming.stateStore.providerClass" ->
+        ("org.apache.spark.sql.execution.streaming.state." +
+          "RocksDBStateStoreProvider")))
     spark.sparkContext.setLogLevel("WARN")
 
     val tmpRoot = "/tmp/ssb"

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,21 +10,10 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // graft's optimizer rules (BinnedRangeJoinRule) run in the
-      // harness session so q43's natural theta-join is planned — and
-      // oracle-verified — through the rewrite.
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // One session runs all 40+ queries: let q29/q42 reuse the pairs
-      // their defining pipelines (q28/q35) already computed.
-      .config(ops.PipelineCache.ConfKey, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // The engine Bench times, so q43's theta-join is oracle-verified
+    // through BinnedRangeJoinRule and q29/q42 reuse the pairs their
+    // defining pipelines (q28/q35) already computed.
+    val spark = Mains.session(Mains.querySettings(Mains.cpus("4")))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

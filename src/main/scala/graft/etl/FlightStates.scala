@@ -143,7 +143,9 @@ object FlightStates {
     df.withColumn("load_timestamp", lit(loadTs))
       .withColumn("file_source", lit(fileName))
 
-  /** Untyped scan of raw extract CSVs (file or directory). Matches the
+  /** The raw extract CSV dialect — one option set for the batch
+    * [[readRaw]] and the streaming `FlightStream.readRawStream`, so
+    * both read a landed file cell-identically. Matches the
     * reference's discovery predicate `startswith('states_') and
     * endswith('.csv')` (S7/F5, `load_warehouse.py:174-175`) via
     * pathGlobFilter — evaluated at file-listing time, so non-matching
@@ -161,13 +163,14 @@ object FlightStates {
     * API's strings are single-line; csvField would quote one, but
     * pandas-side parity for that corner is not worth losing
     * intra-file parallelism). */
+  val RawCsvOptions: Map[String, String] = Map(
+    "header" -> "true",
+    "escape" -> "\"",
+    "pathGlobFilter" -> "states_*.csv")
+
+  /** Untyped scan of raw extract CSVs (file or directory). */
   def readRaw(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .option("header", "true")
-      .option("escape", "\"")
-      .option("pathGlobFilter", "states_*.csv")
-      .schema(rawSchema)
-      .csv(path)
+    spark.read.options(RawCsvOptions).schema(rawSchema).csv(path)
 
   /** Full staging kernel: raw scan → audit → clean. */
   def cleanFromDir(spark: SparkSession, dir: String): DataFrame =

@@ -45,8 +45,7 @@ object FlightSessions {
     * exactly like sessionsBatch; a millis comparison would close
     * boundary gaps (e.g. 1800000.4 ms) differently on the two paths.
     * (The `% 1000` keeps only the sub-millisecond nanos `getTime`
-    * hasn't already counted.) Shared with [[FlightSessionsTws]] so
-    * the two stateful forms cannot drift on this detail. */
+    * hasn't already counted.) */
   private[streaming] def us(t: Timestamp): Long =
     t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
 
@@ -54,10 +53,8 @@ object FlightSessions {
     * session reachable within the gap on EITHER side (≤ 2 of them —
     * open sessions are pairwise > gap apart by construction), bridging
     * two when the event lands between them. This fold IS the
-    * sessionization semantics; [[FlightSessionsTws]] shares it so the
-    * fMGWS and transformWithState twins stay merge-rule-identical by
-    * construction, not by test luck. */
-  private[streaming] def merge(sess: List[OpenSession], ts: Timestamp,
+    * sessionization semantics. */
+  private def merge(sess: List[OpenSession], ts: Timestamp,
       gapUs: Long): List[OpenSession] = {
     val (near, far) = sess.partition(o =>
       us(ts) >= us(o.start) - gapUs && us(ts) <= us(o.end) + gapUs)

@@ -21,21 +21,16 @@ import graft.etl.FlightStates
   * The batch [[graft.etl.StagingPipeline]] remains the
   * reference-faithful path (per-file status rows an operator can
   * inspect); this is the scale path — on a 1000-executor cluster the
-  * file source lists incrementally (`maxFilesPerTrigger` bounds a
-  * micro-batch) and each micro-batch is a normal distributed job.
+  * file source lists incrementally and each micro-batch is a normal
+  * distributed job.
   */
 object FlightStream {
 
   /** Untyped streaming scan (schema pinned, never inferred — same
-    * contract as the batch `FlightStates.readRaw`). */
-  def readRawStream(spark: SparkSession, rawDir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val r = spark.readStream
-      .option("header", "true")
-      .option("pathGlobFilter", "states_*.csv")
-    maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
-    r.schema(FlightStates.rawSchema).csv(rawDir)
-  }
+    * dialect and contract as the batch `FlightStates.readRaw`). */
+  def readRawStream(spark: SparkSession, rawDir: String): DataFrame =
+    spark.readStream.options(FlightStates.RawCsvOptions)
+      .schema(FlightStates.rawSchema).csv(rawDir)
 
   /** Drain-available staging run: raw-first dual sink, one checkpoint.
     * Blocks until the drain completes; returns the finished query. */

@@ -46,12 +46,9 @@ case class UpsertRow(user_id: Long, event_id: Long, event_type: String,
   */
 object StreamingUpsert {
 
-  /** The latest-wins fold — ONE copy of the semantics, shared with
-    * the `transformWithState` twin ([[StreamingUpsertTws]]) the way
-    * `FlightSessions.merge` is shared with its twin, so the tie rule
-    * and emission condition cannot drift between APIs. Returns the
-    * key's new state iff its latest row changed (emit), None
-    * otherwise (stale batch — no emission, no state write).
+  /** The latest-wins fold: the tie rule and emission condition.
+    * Returns the key's new state iff its latest row changed (emit),
+    * None otherwise (stale batch — no emission, no state write).
     *
     * Only the batch slice's (us, event_id) MAXIMUM matters:
     * intermediate versions within a batch can never emit (only the

@@ -5,8 +5,25 @@ import org.apache.spark.sql.functions._
 
 /** End-to-end smoke of the operational surface: diagram stages 4→5→6
   * (warehouse → aggregate artifact → mart) and the StagingTick CLI's
-  * --retry-failed recovery path. */
+  * --retry-failed recovery path, plus the session settings every entry
+  * point builds from. */
 class MainsSpec extends SparkTestBase {
+
+  test("session settings: the base and the query engine, pinned key by key") {
+    // the base: the ticks (Mains.session), PlanGolden, this test base
+    val base = Map(
+      "spark.master" -> "local[4]",
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.ui.enabled" -> "false")
+    assert(Mains.settings("4") === base)
+    // the query engine: Bench, MicroBench, PlanProbe, Verify
+    assert(Mains.querySettings("4") === base ++ Map(
+      "spark.sql.extensions" -> "graft.plans.GraftExtensions",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.graft.pipelineCache" -> "true"))
+  }
 
   test("stages 5-6: warehouse -> aggregate file -> mart, idempotent per date") {
     val wh = tmpDir("wh")

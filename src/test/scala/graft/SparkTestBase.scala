@@ -7,17 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for the suite (one JVM-wide session — the
   * scalatest runner forks one JVM, so `getOrCreate` dedupes). */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+  lazy val spark: SparkSession = Mains.session(Mains.settings("4") ++ Map(
+    "spark.app.name" -> "graft-tests",
     // every optimizer step (incl. graft's injected rules) must preserve
     // Catalyst's plan invariants — unique ExprIds, resolved outputs
-    .config("spark.sql.planChangeValidation", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+    "spark.sql.planChangeValidation" -> "true"))
 
   def fixturesDir: String = "src/test/resources/opensky"
 

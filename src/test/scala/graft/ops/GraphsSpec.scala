@@ -170,6 +170,8 @@ class GraphsSpec extends SparkTestBase {
     // centered moments are BIGINT by declared contract (the internal
     // arithmetic is DECIMAL(38,0); the output cast throws loudly past
     // int64 — see the scaladoc's declared-bound note)
+    assert(num.isValidLong && dx.isValidLong && dy.isValidLong,
+      s"fixture moments outgrew int64: num=$num den_x=$dx den_y=$dy")
     assert(r.getAs[Long]("num") === num.toLong)
     assert(r.getAs[Long]("den_x") === dx.toLong)
     assert(r.getAs[Long]("den_y") === dy.toLong)

@@ -58,6 +58,26 @@ class FlightStreamSpec extends SparkTestBase {
     assert(second > first)
   }
 
+  test("the drain reads the doubled-quote escape exactly like readRaw") {
+    // RFC-4180 cell `"AB""C"` is AB"C; under Spark's default backslash
+    // escape the stream would keep both quote chars
+    val (raw, rawSink, clean, ckpt) = stageDirs()
+    val header = FlightStates.RawColumns.mkString(",")
+    val row = Seq("abc123", "\"AB\"\"C\"") ++
+      Seq.fill(FlightStates.RawColumns.size - 2)("")
+    Files.write(Paths.get(raw, "states_dialect_test.csv"),
+      (header + "\r\n" + row.mkString(",") + "\r\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    FlightStream.stageAvailableNow(spark, raw, rawSink, clean, ckpt)
+    val streamed = spark.read.parquet(clean).select("callsign")
+      .collect().map(_.getString(0)).toSeq
+    val batch = FlightStates.transform(FlightStates.withAudit(
+      FlightStates.readRaw(spark, raw))).select("callsign")
+      .collect().map(_.getString(0)).toSeq
+    assert(batch === Seq("AB\"C"))
+    assert(streamed === batch)
+  }
+
   test("watermarked hourly aggregation: closed windows equal the batch mirror") {
     val (raw, rawSink, clean, ckpt) = stageDirs()
     copyFixtures(raw, 14)

@@ -9,10 +9,6 @@ import graft.RocksDBProvider
   * body of its base spec and swaps nothing but the state store
   * provider via [[graft.RocksDBProvider]] — a semantic difference
   * between providers is a bug, and these classes make it a red test.
-  *
-  * The transformWithState twins (FlightSessionsTwsSpec,
-  * StreamingUpsertTwsSpec) already force RocksDB internally — the
-  * operator requires it — so they need no twin here.
   */
 class FlightSessionsRocksDBSpec extends FlightSessionsSpec with RocksDBProvider
 class FlightStreamRocksDBSpec extends FlightStreamSpec with RocksDBProvider
