@@ -2,12 +2,24 @@ package graft.etl
 
 import graft.SparkTestBase
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.graftbridge.GraftBridge
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** End-to-end staging runs over real fixture extracts: state machine,
-  * raw-first ordering, row-count accounting, failure isolation, retry. */
+  * raw-first ordering, row-count accounting, failure isolation, retry,
+  * and the concurrent staging window's thread contract. */
 class StagingPipelineSpec extends SparkTestBase {
 
-  private def setup(copy: Int = 2): (StagingPipeline, JsonlControlStore, String) = {
+  private final class Dirs(val rawDir: String, val rawSink: String,
+      val cleanDir: String, val ledger: JsonlControlStore) {
+    def pipeline(store: ControlStore = ledger): StagingPipeline =
+      new StagingPipeline(spark, rawDir, rawSink, cleanDir, store)
+  }
+
+  private def dirs(copy: Int): Dirs = {
     val rawDir = tmpDir("raw")
     val fixtures = Files.list(Paths.get(fixturesDir)).toArray
       .map(_.asInstanceOf[java.nio.file.Path])
@@ -19,11 +31,64 @@ class StagingPipelineSpec extends SparkTestBase {
     // a non-matching name the discovery predicate must skip (F5)
     Files.writeString(Paths.get(rawDir, "notes.txt"), "not a states file")
     Files.writeString(Paths.get(rawDir, "other_states.csv"), "wrong,prefix")
-    val ledger = new JsonlControlStore(s"${tmpDir("ledger")}/file_log.jsonl")
-    val p = new StagingPipeline(spark, rawDir, tmpDir("rawsink"),
-      tmpDir("clean"), ledger)
-    (p, ledger, rawDir)
+    new Dirs(rawDir, tmpDir("rawsink"), tmpDir("clean"),
+      new JsonlControlStore(s"${tmpDir("ledger")}/file_log.jsonl"))
   }
+
+  private def setup(copy: Int = 2): (StagingPipeline, JsonlControlStore, String) = {
+    val d = dirs(copy)
+    (d.pipeline(), d.ledger, d.rawDir)
+  }
+
+  /** Jobs of one job group, as the listener bus reports them: how many
+    * started, and the most that were running at once. */
+  private final class GroupJobs(group: String) extends SparkListener {
+    private val live = mutable.Set.empty[Int]
+    var started, peak = 0
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+        started += 1
+        live += e.jobId
+        peak = peak max live.size
+      }
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      live -= e.jobId
+    }
+  }
+
+  /** Runs `body` under a fresh job group set on this thread. */
+  private def inJobGroup[T](body: => T): (T, GroupJobs) = {
+    val sc = spark.sparkContext
+    val group = s"staging-spec-${java.util.UUID.randomUUID()}"
+    val jobs = new GroupJobs(group)
+    sc.addSparkListener(jobs)
+    sc.setJobGroup(group, "staging under test")
+    try {
+      val r = body
+      GraftBridge.waitListenerBusEmpty(spark, 30000L)
+      (r, jobs)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(jobs)
+    }
+  }
+
+  /** Records the thread of every ledger call. */
+  private final class ThreadRecordingStore(inner: ControlStore) extends ControlStore {
+    val threads: java.util.Set[Thread] = ConcurrentHashMap.newKeySet[Thread]()
+    private def on[A](a: => A): A = { threads.add(Thread.currentThread()); a }
+    def register(fileNames: Seq[String]): Unit = on(inner.register(fileNames))
+    def update(fileName: String, status: FileStatus, rowCount: Long,
+        error: Option[String]): Unit =
+      on(inner.update(fileName, status, rowCount, error))
+    def processedNames(): Set[String] = on(inner.processedNames())
+    def newFiles(): Seq[String] = on(inner.newFiles())
+    def all(): Map[String, FileRecord] = on(inner.all())
+  }
+
+  private def listNames(dir: String): Set[String] =
+    new java.io.File(dir).list().toSet
 
   test("runOnce processes exactly the states_*.csv files and books row counts") {
     val (p, ledger, _) = setup(copy = 2)
@@ -63,15 +128,10 @@ class StagingPipelineSpec extends SparkTestBase {
   }
 
   test("failure isolation: a vanished file fails alone; retryFailed re-queues it") {
-    val (p, ledger, rawDir) = setup(copy = 1)
-    // discovered then removed before processing — the realistic race
+    val (p, ledger, _) = setup(copy = 1)
+    // registered by an earlier tick, then vanished before processing
     val ghost = "states_ghost.csv"
-    Files.writeString(Paths.get(rawDir, ghost), "will vanish")
-    val names = new java.io.File(rawDir).list().toSeq
-    assert(names.contains(ghost))
-    Files.writeString(Paths.get(rawDir, ghost), "x") // keep file, corrupt? no —
-    Files.delete(Paths.get(rawDir, ghost))
-    ledger.register(Seq(ghost)) // as if discovered by an earlier tick
+    ledger.register(Seq(ghost))
     val s = p.runOnce()
     assert(s.failed === Seq(ghost))
     assert(s.processed.size === 1) // the healthy file still went through
@@ -132,5 +192,50 @@ class StagingPipelineSpec extends SparkTestBase {
     assert(again.processed === Seq(names.head),
       "the reclaimed file re-processes to completion")
     assert(ledger.all()(names.head).status === FileStatus.CleanExported)
+  }
+
+  test("staging runs two jobs per file: the raw write and the clean write") {
+    val (p, _, _) = setup(copy = 2)
+    val (s, jobs) = inJobGroup(p.runOnce())
+    assert(s.processed.size === 2)
+    assert(jobs.started === 2 * s.processed.size)
+  }
+
+  test("more files than defaultParallelism: a vanished file fails alone, the rest complete") {
+    val d = dirs(copy = 6)
+    val healthy = listNames(d.rawDir).filter(_.startsWith("states_")).toSeq.sorted
+    assert(healthy.size > spark.sparkContext.defaultParallelism)
+    // registered by an earlier tick, then vanished; sorts mid-list
+    val ghost = healthy(2).stripSuffix(".csv") + "_ghost.csv"
+    d.ledger.register(Seq(ghost))
+    assert((healthy :+ ghost).sorted.indexOf(ghost) === 3)
+    val s = d.pipeline().runOnce()
+    assert(s.failed === Seq(ghost))
+    assert(s.processed === healthy)
+    val recs = d.ledger.all()
+    assert(recs(ghost).status === FileStatus.Failed)
+    assert(!recs.values.exists(_.status == FileStatus.Processing))
+    val perFile = d.pipeline().cleanStaged().groupBy("file_source").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    healthy.foreach { n =>
+      assert(recs(n).status === FileStatus.CleanExported)
+      assert(recs(n).rowCount === perFile(n))
+    }
+    assert(listNames(d.rawSink) === healthy.toSet)
+    assert(listNames(d.cleanDir) === healthy.map("clean_" + _).toSet)
+  }
+
+  test("ledger calls stay on the calling thread; workers inherit its local properties") {
+    val d = dirs(copy = 6)
+    val calls = new ThreadRecordingStore(d.ledger)
+    val (s, jobs) = inJobGroup(d.pipeline(calls).runOnce())
+    assert(s.processed.size === 6 && s.failed.isEmpty)
+    assert(calls.threads.asScala.toSet === Set(Thread.currentThread()))
+    // two jobs per file (pinned above), every one in the caller's group
+    assert(jobs.started === 2 * s.processed.size)
+    assert(jobs.peak <= spark.sparkContext.defaultParallelism)
+    val workers = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName.startsWith(StagingPipeline.WorkerPrefix))
+    assert(workers.isEmpty, s"staging workers outlived runOnce: $workers")
   }
 }
