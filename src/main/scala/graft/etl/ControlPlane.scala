@@ -53,96 +53,44 @@ trait ControlStore {
 }
 
 /** Append-only JSONL file ledger; last record per file_name wins.
-  * File mechanics (heal-before-append in-place truncation, torn-final-
-  * line-forgiving reads, single-process contract) live in the shared
-  * [[JsonlLedgerFile]]. */
+  * The line format and its file mechanics (heal-before-append in-place
+  * truncation, torn-final-line-forgiving reads, single-process
+  * contract) live in the shared [[JsonlLedgerFile]]; its real JSON
+  * parser is why a hostile file name (say one holding `","status":`)
+  * stays inside its string value and cannot corrupt reads. */
 final class JsonlControlStore(path: String) extends ControlStore {
   private val ledger = new JsonlLedgerFile(path, "ledger")
 
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
-  private def append(r: FileRecord): Unit = synchronized {
-    val err = r.errorMessage.map(e => "\"" + esc(e) + "\"").getOrElse("null")
-    val line = s"""{"file_name":"${esc(r.fileName)}","status":"${r.status.name}",""" +
-      s""""row_count":${r.rowCount},"error_message":$err,""" +
-      s""""last_updated":"${r.lastUpdated}"}"""
-    ledger.appendLine(line)
+  private def append(rs: Seq[FileRecord]): Unit = synchronized {
+    ledger.append(rs.map(r => ledger.record()
+      .put("file_name", r.fileName)
+      .put("status", r.status.name)
+      .put("row_count", r.rowCount)
+      .put("error_message", r.errorMessage.orNull)
+      .put("last_updated", r.lastUpdated.toString)))
   }
 
   override def all(): Map[String, FileRecord] = synchronized {
-    ledger.readParsed(parseLine)
+    ledger.read(n => FileRecord(
+      n.required("file_name").asText(),
+      FileStatus.parse(n.required("status").asText()),
+      n.required("row_count").asLong(),
+      JsonlLedgerFile.nullableText(n, "error_message"),
+      Instant.parse(n.required("last_updated").asText())))
       .foldLeft(Map.empty[String, FileRecord])((m, r) => m + (r.fileName -> r))
   }
 
-  // Strict POSITIONAL parser for our own flat writer format. Fields are
-  // consumed in the exact write order with a scan cursor that advances
-  // past each value, so a key-like substring INSIDE an escaped string
-  // value (e.g. a hostile file name containing `"status":`) can never be
-  // mistaken for the real key — ledger reads are not corruptible by file
-  // names.
-  private def parseLine(line: String): FileRecord = {
-    var pos = 0
-    def expect(s: String): Unit = {
-      if (!line.startsWith(s, pos))
-        sys.error(s"corrupt ledger line at $pos: expected $s")
-      pos += s.length
-    }
-    def string(): String = {
-      expect("\"")
-      val sb = new StringBuilder
-      while (line.charAt(pos) != '"') {
-        if (line.charAt(pos) == '\\') {
-          line.charAt(pos + 1) match {
-            case 'u' =>
-              sb.append(
-                Integer.parseInt(line.substring(pos + 2, pos + 6), 16).toChar)
-              pos += 6
-            case c => sb.append(c); pos += 2
-          }
-        } else { sb.append(line.charAt(pos)); pos += 1 }
-      }
-      pos += 1 // closing quote
-      sb.toString
-    }
-    def number(): Long = {
-      val end = line.indexWhere(ch => ch == ',' || ch == '}', pos)
-      val v = line.substring(pos, end).toLong
-      pos = end
-      v
-    }
-    expect("{\"file_name\":")
-    val fileName = string()
-    expect(",\"status\":")
-    val status = FileStatus.parse(string())
-    expect(",\"row_count\":")
-    val rowCount = number()
-    expect(",\"error_message\":")
-    val err =
-      if (line.startsWith("null", pos)) { pos += 4; None }
-      else Some(string())
-    expect(",\"last_updated\":")
-    val ts = Instant.parse(string())
-    FileRecord(fileName, status, rowCount, err, ts)
-  }
-
-  override def register(fileNames: Seq[String]): Unit = {
+  override def register(fileNames: Seq[String]): Unit = synchronized {
     val known = all().keySet
-    fileNames.filterNot(known).foreach { f =>
-      append(FileRecord(f, FileStatus.New, 0L, None, Instant.now()))
-    }
+    append(fileNames.filterNot(known)
+      .map(FileRecord(_, FileStatus.New, 0L, None, Instant.now())))
   }
 
   override def update(fileName: String, status: FileStatus, rowCount: Long,
       error: Option[String]): Unit =
-    append(FileRecord(fileName, status, rowCount,
+    append(Seq(FileRecord(fileName, status, rowCount,
       // job-log message truncation parity (F7, extract_script.py:184)
-      error.map(_.take(500)), Instant.now()))
+      error.map(_.take(500)), Instant.now())))
 
   override def processedNames(): Set[String] =
     all().collect { case (n, r) if r.status != FileStatus.New => n }.toSet

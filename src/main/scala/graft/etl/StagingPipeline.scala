@@ -130,13 +130,7 @@ final class StagingPipeline(
     * re-processed because the work list only selects status='NEW';
     * SURVEY §3/E2). Explicit, not automatic: retry policy is the
     * operator's call, exactly like re-running a failed cron tick. */
-  def retryFailed(): Seq[String] = {
-    val failed = ledger.all().collect {
-      case (n, r) if r.status == FileStatus.Failed => n
-    }.toSeq.sorted
-    failed.foreach(ledger.update(_, FileStatus.New))
-    failed
-  }
+  def retryFailed(): Seq[String] = requeue(FileStatus.Failed)
 
   /** Re-queue PROCESSING files as NEW — CRASH recovery: a driver
     * killed between the Processing mark and the terminal update
@@ -147,12 +141,15 @@ final class StagingPipeline(
     * is idempotent (both sinks overwrite per file). A run has at most
     * `width` files (see the class doc) in PROCESSING at any moment, so a
     * crash strands at most that many. */
-  def reclaimProcessing(): Seq[String] = {
-    val stuck = ledger.all().collect {
-      case (n, r) if r.status == FileStatus.Processing => n
+  def reclaimProcessing(): Seq[String] = requeue(FileStatus.Processing)
+
+  /** Re-queue every `from` file as NEW, in name order; returns them. */
+  private def requeue(from: FileStatus): Seq[String] = {
+    val names = ledger.all().collect {
+      case (n, r) if r.status == from => n
     }.toSeq.sorted
-    stuck.foreach(ledger.update(_, FileStatus.New))
-    stuck
+    names.foreach(ledger.update(_, FileStatus.New))
+    names
   }
 
   /** Per-file unit (`process_single_file`, `load_warehouse.py:131-161`):

@@ -1,5 +1,6 @@
 package graft.extract
 
+import graft.etl.JsonlLedgerFile
 import java.time.Instant
 
 /** Job-run ledger + configuration reads — the extract stage's control
@@ -60,8 +61,7 @@ final class JsonlJobControl(
     config: Map[String, String],
     jobs: Map[String, Map[String, String]]) extends JobControl {
 
-  private val ledger = new graft.etl.JsonlLedgerFile(path, "job_logs")
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+  private val ledger = new JsonlLedgerFile(path, "job_logs")
 
   override def systemConfig(key: String): String =
     config.getOrElse(key,
@@ -72,36 +72,23 @@ final class JsonlJobControl(
       sys.error(s"job_name '$jobName' not found in job_definitions"))
 
   private def append(r: JobLogRecord): Unit = synchronized {
-    val n = mapper.createObjectNode()
-    n.put("log_id", r.logId)
-    n.put("job_name", r.jobName)
-    n.put("start_time", r.startTime.toString)
-    r.endTime match {
-      case Some(t) => n.put("end_time", t.toString)
-      case None => n.putNull("end_time")
-    }
-    n.put("status", r.status)
-    r.message match {
-      case Some(m) => n.put("message", m)
-      case None => n.putNull("message")
-    }
-    ledger.appendLine(mapper.writeValueAsString(n))
+    ledger.append(Seq(ledger.record()
+      .put("log_id", r.logId)
+      .put("job_name", r.jobName)
+      .put("start_time", r.startTime.toString)
+      .put("end_time", r.endTime.map(_.toString).orNull)
+      .put("status", r.status)
+      .put("message", r.message.orNull)))
   }
 
   private def readAll(): Seq[JobLogRecord] = synchronized {
-    ledger.readParsed(parseRecord)
-  }
-
-  private def parseRecord(line: String): JobLogRecord = {
-    val n = mapper.readTree(line)
-    JobLogRecord(
-      n.get("log_id").asLong(),
-      n.get("job_name").asText(),
-      Instant.parse(n.get("start_time").asText()),
-      if (n.get("end_time").isNull) None
-      else Some(Instant.parse(n.get("end_time").asText())),
-      n.get("status").asText(),
-      if (n.get("message").isNull) None else Some(n.get("message").asText()))
+    ledger.read(n => JobLogRecord(
+      n.required("log_id").asLong(),
+      n.required("job_name").asText(),
+      Instant.parse(n.required("start_time").asText()),
+      JsonlLedgerFile.nullableText(n, "end_time").map(Instant.parse),
+      n.required("status").asText(),
+      JsonlLedgerFile.nullableText(n, "message")))
   }
 
   override def logJobStart(jobName: String, now: Instant): Long = synchronized {

@@ -88,12 +88,48 @@ class ControlPlaneSpec extends AnyFunSuite {
     // and the store remains writable (recovery re-runs the step)
     s.update("states_a.csv", FileStatus.Failed)
     assert(s.all()("states_a.csv").status === FileStatus.Failed)
+    // torn just before its closing brace: still torn, not a live record
+    java.nio.file.Files.writeString(f,
+      """{"file_name":"states_a.csv","status":"CLEAN_EXPORTED","row_count":5,"error_message":null,"last_updated":"2026-01-01T00:00:00Z"""",
+      java.nio.file.StandardOpenOption.APPEND)
+    assert(s.all()("states_a.csv").status === FileStatus.Failed)
+    s.update("states_a.csv", FileStatus.CleanExported, rowCount = 7)
+    assert(s.all()("states_a.csv").rowCount === 7L)
     // an INTERIOR malformed line is real corruption — hard failure
-    val g = dir.resolve("corrupt.jsonl")
-    java.nio.file.Files.writeString(g,
-      "{\"file_name\":\"x\",\"bad\n" +
-        """{"file_name":"states_b.csv","status":"NEW","row_count":0,"error_message":null,"last_updated":"2026-01-01T00:00:00Z"}""" + "\n")
-    val s2 = new JsonlControlStore(g.toString)
-    intercept[Exception] { s2.all() }
+    val ok = """{"file_name":"states_b.csv","status":"NEW","row_count":0,"error_message":null,"last_updated":"2026-01-01T00:00:00Z"}"""
+    for ((name, interior) <- Seq(
+        "corrupt.jsonl" -> "{\"file_name\":\"x\",\"bad",
+        "run-together.jsonl" -> (ok + ok))) {
+      val g = dir.resolve(name)
+      java.nio.file.Files.writeString(g, interior + "\n" + ok + "\n")
+      val s2 = new JsonlControlStore(g.toString)
+      intercept[Exception] { s2.all() }
+    }
+  }
+
+  test("ledgers in the hand-escaped line format still load; ordinary lines keep their bytes") {
+    val dir = java.nio.file.Files.createTempDirectory("ledger-compat")
+    val f = dir.resolve("file_log.jsonl")
+    // the old writer escaped every control character as a 6-char
+    // unicode escape (backslash, u, 4 hex digits)
+    val u = "\\u"
+    java.nio.file.Files.writeString(f,
+      """{"file_name":"states_\",\"status\":\"CLEAN_EXPORTED\",\"row_count\":9,\"x\":\".csv",""" +
+        """"status":"FAILED","row_count":3,"error_message":"quote \" slash \\ nl""" +
+        u + "000a" + "tab" + u + """0009end","last_updated":"2026-01-02T03:04:05.123456Z"}""" + "\n")
+    val hostile = """states_","status":"CLEAN_EXPORTED","row_count":9,"x":".csv"""
+    val s = new JsonlControlStore(f.toString)
+    assert(s.all() === Map(hostile -> FileRecord(hostile, FileStatus.Failed, 3L,
+      Some("quote \" slash \\ nl\ntab\tend"),
+      java.time.Instant.parse("2026-01-02T03:04:05.123456Z"))))
+    s.update(hostile, FileStatus.New)
+    assert(s.all()(hostile).status === FileStatus.New)
+    // an ordinary record is written byte-for-byte as the old writer did
+    val g = dir.resolve("ordinary.jsonl")
+    new JsonlControlStore(g.toString)
+      .update("states_o.csv", FileStatus.CleanExported, rowCount = 7)
+    val line = java.nio.file.Files.readString(g)
+    assert(line.matches("""\{"file_name":"states_o.csv","status":"CLEAN_EXPORTED",""" +
+      """"row_count":7,"error_message":null,"last_updated":"[0-9T:.Z-]+"\}\n"""))
   }
 }

@@ -109,6 +109,16 @@ class ExtractJobSpec extends SparkTestBase {
     assert(r2.logId === r1.logId + 1)
   }
 
+  test("K5 job log: two records run together on an interior line fail hard") {
+    val path = s"${tmpDir("joblog")}/job_logs.jsonl"
+    def rec(id: Int, status: String) =
+      s"""{"log_id":$id,"job_name":"crawl_test","start_time":"2026-01-02T03:04:05Z",""" +
+        s""""end_time":null,"status":"$status","message":null}"""
+    Files.writeString(Paths.get(path),
+      rec(1, "STARTED") + rec(2, "STARTED") + "\n" + rec(1, "COMPLETED") + "\n")
+    intercept[Exception](new JsonlJobControl(path, Map.empty, Map.empty).jobLogs())
+  }
+
   test("S4 missing job or config key errors before any log is opened") {
     val c = control(tmpDir("landing"))
     intercept[RuntimeException](ExtractJob.run("nope", c, fakeHttp(), fixedClock))
