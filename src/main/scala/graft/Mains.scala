@@ -21,12 +21,26 @@ object Mains {
     sys.env.getOrElse("SPARK_GRAFT_CPUS", default)
 
   /** The shared base: local parallelism, UTC, nanos-as-long for the
-    * harness parquet, no UI. */
+    * harness parquet, no UI, and file listing always on the driver.
+    *
+    * Listing: above `parallelPartitionDiscovery.threshold` paths (32 by
+    * default) Spark lists leaf files as a Spark job with one task per
+    * path. Under `local[cpus]` those tasks run on this JVM's own cores,
+    * so the job lists the same files the driver would, plus a task's
+    * fixed cost per path. A streaming drain hits this every time: the
+    * file source has already listed its files and hands each one over
+    * as an explicit path, so a 140-file drain paid a 140-task job to
+    * list them again. The threshold is set past any path count, which
+    * keeps listing serial on the driver. A cluster master set through
+    * `SPARK_MASTER` inherits this serial listing too; there parallel
+    * listing pays off only for thousands of directories. */
   def settings(cpus: String): Map[String, String] = Map(
     "spark.master" -> s"local[$cpus]",
     "spark.sql.shuffle.partitions" -> cpus,
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.sources.parallelPartitionDiscovery.threshold" ->
+      Int.MaxValue.toString,
     "spark.ui.enabled" -> "false")
 
   /** The query engine: graft's optimizer rules, AQE and the pipeline

@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Diagram stage 4 — "Load to warehouse" — which the reference declares
   * but never implemented (SURVEY.md scoping note). Spark-first form:
@@ -18,21 +19,43 @@ import org.apache.spark.sql.functions._
   */
 object WarehouseBuild {
 
-  /** Append a cleaned batch into the partitioned warehouse layout. */
-  def load(clean: DataFrame, warehouseDir: String): Unit =
+  /** The warehouse table: the cleaned state columns plus the
+    * `event_date` partition. Every read passes it, so no read runs a
+    * footer job to infer what [[load]] already guarantees. */
+  private val warehouseSchema: StructType = FlightStates.cleanSchema.add("event_date", "date")
+
+  /** The aggregate artifact and the mart: [[dailyAirborne]]'s columns,
+    * with the `event_date` partition last, as a partitioned read
+    * returns it. */
+  private val aggregateSchema: StructType = StructType.fromDDL(
+    "origin_country STRING, n_aircraft BIGINT, n_states BIGINT, event_date DATE")
+
+  /** Append a cleaned batch into the partitioned warehouse layout.
+    * `clean` must carry exactly `FlightStates.cleanSchema`'s column
+    * names and types (nullability aside): [[table]] reads with that
+    * schema, so a renamed column would read back as nulls and a
+    * retyped one would fail only at some later scan. */
+  def load(clean: DataFrame, warehouseDir: String): Unit = {
+    def columns(s: StructType) = s.fields.toSeq.map(f => s"${f.name} ${f.dataType.sql}")
+    val got = columns(clean.schema)
+    val want = columns(FlightStates.cleanSchema)
+    val (extra, missing) = (got.diff(want), want.diff(got))
+    require(extra.isEmpty && missing.isEmpty,
+      s"warehouse load expects FlightStates.cleanSchema: unexpected columns " +
+        s"[${extra.mkString(", ")}], missing [${missing.mkString(", ")}]")
     clean
       .withColumn("event_date", to_date(col("time_position")))
       .write.mode("append")
       .partitionBy("event_date")
       .parquet(warehouseDir)
+  }
 
   def table(spark: SparkSession, warehouseDir: String): DataFrame =
-    spark.read.parquet(warehouseDir)
+    spark.read.schema(warehouseSchema).parquet(warehouseDir)
 
-  /** Example date-bounded mart query: daily airborne aircraft counts
-    * per origin country over a date range — the scan must show the
-    * range as PartitionFilters, not data filters. */
-  def dailyAirborne(spark: SparkSession, warehouseDir: String,
+  /** The daily aggregate over a date range, unsorted: what
+    * [[aggregate]] writes and [[dailyAirborne]] sorts. */
+  private def daily(spark: SparkSession, warehouseDir: String,
       from: String, to: String): DataFrame =
     table(spark, warehouseDir)
       .filter(col("event_date") >= lit(from) && col("event_date") <= lit(to)
@@ -40,7 +63,14 @@ object WarehouseBuild {
       .groupBy("event_date", "origin_country")
       .agg(countDistinct("icao24").as("n_aircraft"),
         count(lit(1)).as("n_states"))
-      .orderBy("event_date", "origin_country")
+
+  /** Example date-bounded mart query: daily airborne aircraft counts
+    * per origin country over a date range, sorted by date and country
+    * for its readers — the scan must show the range as
+    * PartitionFilters, not data filters. */
+  def dailyAirborne(spark: SparkSession, warehouseDir: String,
+      from: String, to: String): DataFrame =
+    daily(spark, warehouseDir, from, to).orderBy("event_date", "origin_country")
 
   /** Diagram stage 5 — "Create aggregate script" (declared in the
     * reference's architecture diagram, never implemented there): read
@@ -51,11 +81,15 @@ object WarehouseBuild {
     * only the touched event_date partitions are replaced, history is
     * untouched. That is the property a scheduled (cron-hourly, like the
     * reference's stages) aggregate job needs: a re-run after a late
-    * batch or a failure converges instead of duplicating. */
+    * batch or a failure converges instead of duplicating.
+    *
+    * The write is unsorted: a global sort would cost a sampling job and
+    * a range exchange, and the partitioned write throws the order away.
+    * [[dailyAirborne]] stays sorted for its readers. */
   def aggregate(spark: SparkSession, warehouseDir: String,
       aggregateDir: String, from: String, to: String): Long = {
     val obs = org.apache.spark.sql.Observation()
-    dailyAirborne(spark, warehouseDir, from, to)
+    daily(spark, warehouseDir, from, to)
       .observe(obs, count(lit(1)).as("rows"))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -130,11 +164,13 @@ object WarehouseBuild {
     * counterparts; everything else is preserved — loads are idempotent
     * and late re-aggregations converge. The mart is a parquet table
     * here (the reference's mart was a declared-but-unbuilt Postgres
-    * schema); a JDBC mart is one `JdbcSinks`-style writer away. */
+    * schema); a JDBC mart is one `JdbcSinks`-style writer away. The
+    * read passes `aggregateSchema`, so the load is the write's one
+    * job. */
   def loadMart(spark: SparkSession, aggregateDir: String,
       martDir: String): Long = {
     val obs = org.apache.spark.sql.Observation()
-    spark.read.parquet(aggregateDir)
+    spark.read.schema(aggregateSchema).parquet(aggregateDir)
       .observe(obs, count(lit(1)).as("rows"))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -160,8 +196,7 @@ object WarehouseBuild {
     // persisted: the date collect, the append and the returned count
     // must all see ONE snapshot (three separate scans could straddle a
     // concurrent aggregate rewrite and disagree)
-    val agg = spark.read.parquet(aggregateDir)
-      .withColumn("event_date", col("event_date").cast("date"))
+    val agg = spark.read.schema(aggregateSchema).parquet(aggregateDir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
     val dates = agg.select("event_date").distinct()

@@ -33,7 +33,12 @@ object FlightStream {
       .schema(FlightStates.rawSchema).csv(rawDir)
 
   /** Drain-available staging run: raw-first dual sink, one checkpoint.
-    * Blocks until the drain completes; returns the finished query. */
+    * Blocks until the drain completes; returns the finished query.
+    *
+    * A batch runs two jobs, the raw write and the clean write, over one
+    * persisted scan. The source hands the batch its already-listed
+    * files as explicit paths; `Mains.settings` keeps their re-listing
+    * on the driver, so a many-file drain adds no listing job. */
   def stageAvailableNow(spark: SparkSession, rawDir: String,
       rawSinkDir: String, cleanSinkDir: String,
       checkpointDir: String): StreamingQuery = {

@@ -16,6 +16,7 @@ class MainsSpec extends SparkTestBase {
       "spark.sql.shuffle.partitions" -> "4",
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "2147483647",
       "spark.ui.enabled" -> "false")
     assert(Mains.settings("4") === base)
     // the query engine: Bench, MicroBench, PlanProbe, Verify
@@ -53,6 +54,20 @@ class MainsSpec extends SparkTestBase {
       Seq("event_date", "origin_country", "n_aircraft", "n_states"),
       "left_anti").count() === 0)
     assert(got.count() === expect.count())
+  }
+
+  test("the warehouse tail runs only its work's jobs: no footer read, no sort") {
+    val wh = tmpDir("wh3")
+    val agg = tmpDir("agg3")
+    val mart = tmpDir("mart3")
+    WarehouseBuild.load(FlightStates.cleanFromDir(spark, fixturesDir), wh)
+    val (n, aggJobs) = countingJobs(
+      WarehouseBuild.aggregate(spark, wh, agg, "2025-11-12", "2025-11-13"))
+    val (m, martJobs) = countingJobs(WarehouseBuild.loadMart(spark, agg, mart))
+    assert(n > 0 && m === n)
+    // aggregate: the count-distinct's two shuffle stages, then the
+    // write; loadMart: the write alone
+    assert((aggJobs.started, martJobs.started) === ((3, 1)))
   }
 
   test("aggregating a later date range preserves earlier mart partitions") {

@@ -3,9 +3,6 @@ package graft.etl
 import graft.SparkTestBase
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.ConcurrentHashMap
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.graftbridge.GraftBridge
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** End-to-end staging runs over real fixture extracts: state machine,
@@ -38,40 +35,6 @@ class StagingPipelineSpec extends SparkTestBase {
   private def setup(copy: Int = 2): (StagingPipeline, JsonlControlStore, String) = {
     val d = dirs(copy)
     (d.pipeline(), d.ledger, d.rawDir)
-  }
-
-  /** Jobs of one job group, as the listener bus reports them: how many
-    * started, and the most that were running at once. */
-  private final class GroupJobs(group: String) extends SparkListener {
-    private val live = mutable.Set.empty[Int]
-    var started, peak = 0
-    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
-        started += 1
-        live += e.jobId
-        peak = peak max live.size
-      }
-    }
-    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
-      live -= e.jobId
-    }
-  }
-
-  /** Runs `body` under a fresh job group set on this thread. */
-  private def inJobGroup[T](body: => T): (T, GroupJobs) = {
-    val sc = spark.sparkContext
-    val group = s"staging-spec-${java.util.UUID.randomUUID()}"
-    val jobs = new GroupJobs(group)
-    sc.addSparkListener(jobs)
-    sc.setJobGroup(group, "staging under test")
-    try {
-      val r = body
-      GraftBridge.waitListenerBusEmpty(spark, 30000L)
-      (r, jobs)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(jobs)
-    }
   }
 
   /** Records the thread of every ledger call. */
@@ -196,7 +159,7 @@ class StagingPipelineSpec extends SparkTestBase {
 
   test("staging runs two jobs per file: the raw write and the clean write") {
     val (p, _, _) = setup(copy = 2)
-    val (s, jobs) = inJobGroup(p.runOnce())
+    val (s, jobs) = countingJobs(p.runOnce())
     assert(s.processed.size === 2)
     assert(jobs.started === 2 * s.processed.size)
   }
@@ -228,10 +191,10 @@ class StagingPipelineSpec extends SparkTestBase {
   test("ledger calls stay on the calling thread; workers inherit its local properties") {
     val d = dirs(copy = 6)
     val calls = new ThreadRecordingStore(d.ledger)
-    val (s, jobs) = inJobGroup(d.pipeline(calls).runOnce())
+    val (s, jobs) = countingJobs(d.pipeline(calls).runOnce())
     assert(s.processed.size === 6 && s.failed.isEmpty)
     assert(calls.threads.asScala.toSet === Set(Thread.currentThread()))
-    // two jobs per file (pinned above), every one in the caller's group
+    // two jobs per file (pinned above), every one carrying the caller's tag
     assert(jobs.started === 2 * s.processed.size)
     assert(jobs.peak <= spark.sparkContext.defaultParallelism)
     val workers = Thread.getAllStackTraces.keySet.asScala

@@ -79,6 +79,37 @@ class WarehouseBuildSpec extends SparkTestBase {
     assert(WarehouseBuild.table(spark, d).count() === content.length.toLong)
   }
 
+  test("load rejects a renamed or a retyped column, naming the mismatch") {
+    // a renamed column would read back as nulls under the known schema
+    val clean = FlightStates.cleanFromDir(spark, fixturesDir)
+    Seq(
+      clean.withColumnRenamed("icao24", "icao") ->
+        "unexpected columns [icao STRING], missing [icao24 STRING]",
+      clean.withColumn("position_source", col("position_source").cast("long")) ->
+        "unexpected columns [position_source BIGINT], missing [position_source INT]"
+    ).foreach { case (bad, mismatch) =>
+      val d = tmpDir("wh-bad")
+      val e = intercept[IllegalArgumentException](WarehouseBuild.load(bad, d))
+      assert(e.getMessage.contains(mismatch))
+      assert(new java.io.File(d).list().isEmpty, "nothing was written")
+    }
+  }
+
+  test("load accepts the staged clean exports as the hourly tick re-reads them") {
+    val raw = tmpDir("wh-staged-raw")
+    val f = java.nio.file.Files.list(java.nio.file.Paths.get(fixturesDir)).toArray
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.endsWith(".csv")).minBy(_.getFileName.toString)
+    java.nio.file.Files.copy(f, java.nio.file.Paths.get(raw, f.getFileName.toString))
+    val p = new StagingPipeline(spark, raw, tmpDir("wh-staged-sink"),
+      tmpDir("wh-staged-clean"),
+      new JsonlControlStore(s"${tmpDir("wh-staged-ledger")}/file_log.jsonl"))
+    assert(p.runOnce().processed.size === 1)
+    val d = tmpDir("wh-staged")
+    WarehouseBuild.load(p.cleanStaged(), d)
+    assert(WarehouseBuild.table(spark, d).count() === p.cleanStaged().count())
+  }
+
   test("SQL views expose every harness table to spark.sql") {
     Views.register(spark, "/root/testdata/sf0.001")
     val n = spark.sql(

@@ -39,6 +39,25 @@ class FlightStreamSpec extends SparkTestBase {
     assert(spark.read.parquet(clean).count() === cleanCount)
   }
 
+  test("a many-file drain runs its two writes and no listing job") {
+    // past the 32 paths at which Spark would list them as a job
+    val (raw, rawSink, clean, ckpt) = stageDirs()
+    val Seq(first) = copyFixtures(raw, 1)
+    (1 until 40).foreach { i =>
+      Files.createLink(Paths.get(raw, f"states_link_$i%02d.csv"), Paths.get(raw, first))
+    }
+    val (q, jobs) = countingJobs(
+      FlightStream.stageAvailableNow(spark, raw, rawSink, clean, ckpt))
+    assert(q.recentProgress.count(_.numInputRows > 0) === 1)
+    assert(jobs.started === 2, "the raw write and the clean write")
+    // and the clean sink loads into the warehouse as the backfill does
+    val wh = tmpDir("s-wh")
+    graft.etl.WarehouseBuild.load(spark.read.parquet(clean).drop("batch_id"), wh)
+    val rows = spark.read.parquet(clean).count()
+    assert(rows === 40 * FlightStates.readRaw(spark, s"$raw/$first").count())
+    assert(graft.etl.WarehouseBuild.table(spark, wh).count() === rows)
+  }
+
   test("incremental drain picks up only newly landed files") {
     val (raw, rawSink, clean, ckpt) = stageDirs()
     copyFixtures(raw, 2)
