@@ -287,8 +287,8 @@ object Dedup {
     * on node id, nothing driver-side except the O(diameter) loop and
     * its scalar convergence count (the same driver loop every Pregel
     * implementation runs; each round's data path is fully parallel).
-    * Labels are persisted per round and the previous round unpersisted,
-    * so lineage stays bounded. For adversarial million-hop chain graphs
+    * Labels are persisted per round in a [[Rounds]] scope, so lineage
+    * stays bounded. For adversarial million-hop chain graphs
     * the round count, not the data path, is the limit — the standard
     * fix (large-star/small-star pointer doubling, O(log n) rounds)
     * drops into the same loop; near-dup graphs never need it. */
@@ -302,50 +302,32 @@ object Dedup {
     }
 
   private def dedupClustersUncached(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val pairs = minhashPairs(s, dir).select("doc_a", "doc_b")
     // undirected: propagate both ways
     val edges = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
       .union(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
     // Every round references the previous labels TWICE (own label +
-    // neighbor side), so an unpersisted lineage recomputes 2^rounds
-    // times — each round must be persisted while the loop runs, and the
-    // final result lineage-truncated before those persists are dropped.
-    val roundCaches = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    // finally, not sequential: a non-convergence require would
-    // otherwise LEAK every round's persist into the session's cache
-    // manager for its whole lifetime
-    val fixed =
-      try {
-        var labels = Tables.documents(s, dir)
-          .select(col("doc_id").as("u"), col("doc_id").as("lbl"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        roundCaches += labels
-        var converged = false
-        var it = 0
-        while (!converged && it < MaxCcIterations) {
+    // neighbor side), so each round is persisted while the loop runs
+    // and the fixpoint is lineage-truncated before the scope drops
+    // those persists. (Single-process checkpoint; a multi-node
+    // deployment points this at a reliable checkpoint dir instead.)
+    val fixed = Rounds.scoped { r =>
+      val labels0 = r.persist(Tables.documents(s, dir)
+        .select(col("doc_id").as("u"), col("doc_id").as("lbl")))
+      Rounds.iterate(labels0, MaxCcIterations, Some(
+        s"connected components did not converge in $MaxCcIterations rounds — " +
+          "component diameter exceeds the cap; switch to pointer doubling")) {
+        (labels, _) =>
           val nbrMin = edges
             .join(labels.select(col("u").as("v"), col("lbl").as("vlbl")), "v")
             .groupBy("u").agg(min("vlbl").as("nlbl"))
-          val joined = labels.join(nbrMin, Seq("u"), "left")
+          val joined = r.persist(labels.join(nbrMin, Seq("u"), "left")
             .select(col("u"), col("lbl"),
-              least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("nl"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          roundCaches += joined
-          converged = joined.filter(col("nl") < col("lbl")).isEmpty
-          labels = joined.select(col("u"), col("nl").as("lbl"))
-          it += 1
-        }
-        require(converged,
-          s"connected components did not converge in $MaxCcIterations rounds — " +
-            "component diameter exceeds the cap; switch to pointer doubling")
-        // Materialize the fixpoint and cut the iterative lineage, so the
-        // caches can drop — nothing stays registered with the cache
-        // manager after the operator returns. (Single-process checkpoint;
-        // a multi-node deployment points this at a reliable checkpoint
-        // dir instead.)
-        labels.localCheckpoint(true)
-      } finally roundCaches.foreach(_.unpersist(blocking = false))
+              least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("nl")))
+          (joined.select(col("u"), col("nl").as("lbl")),
+            joined.filter(col("nl") < col("lbl")).isEmpty)
+      }.localCheckpoint(true)
+    }
     fixed
       .select(col("u").as("doc_id"), col("lbl").as("cluster"))
       .withColumn("cluster_size", count(lit(1)).over(
@@ -385,7 +367,6 @@ object Dedup {
     *    rounds lose to O(log n). */
   def dedupClustersLargeStar(s: SparkSession, dir: String,
       smallGraphCap: Long = SmallGraphEdgeCap): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val pairs = minhashPairs(s, dir).select("doc_a", "doc_b")
 
     def undirect(e: DataFrame): DataFrame =
@@ -462,38 +443,20 @@ object Dedup {
         .toDF("u", "v")
     }
 
-    val roundCaches = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    // finally: a non-convergence require must not leak the per-round
-    // persists into the session cache manager (same contract as q52)
-    val fixed =
-      try {
-        var edges = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        roundCaches += edges
-        val nEdges = edges.count()
-        val starEdges =
-          if (nEdges <= smallGraphCap) unionFindStar(edges)
-          else {
-            var edgesSig = sig(edges)
-            var converged = false
-            var it = 0
-            while (!converged && it < MaxCcIterations) {
-              val next = smallStar(largeStar(edges))
-                .persist(StorageLevel.MEMORY_AND_DISK)
-              roundCaches += next
-              val nextSig = sig(next)
-              converged = nextSig == edgesSig &&
-                next.exceptAll(edges).isEmpty && edges.exceptAll(next).isEmpty
-              edges = next
-              edgesSig = nextSig
-              it += 1
-            }
-            require(converged,
-              s"pointer doubling did not converge in $MaxCcIterations rounds")
-            edges
-          }
-        starEdges.localCheckpoint(true)
-      } finally roundCaches.foreach(_.unpersist(blocking = false))
+    val fixed = Rounds.scoped { r =>
+      val edges0 = r.persist(pairs.select(col("doc_a").as("u"), col("doc_b").as("v")))
+      val starEdges =
+        if (edges0.count() <= smallGraphCap) unionFindStar(edges0)
+        else Rounds.iterate((edges0, sig(edges0)), MaxCcIterations, Some(
+          s"pointer doubling did not converge in $MaxCcIterations rounds")) {
+          case ((edges, edgesSig), _) =>
+            val next = r.persist(smallStar(largeStar(edges)))
+            val nextSig = sig(next)
+            ((next, nextSig), nextSig == edgesSig &&
+              next.exceptAll(edges).isEmpty && edges.exceptAll(next).isEmpty)
+        }._1
+      starEdges.localCheckpoint(true)
+    }
     // star edges point every non-root at its component min; roots and
     // singletons label themselves
     val lbls = fixed.groupBy("u").agg(min("v").as("lbl"))

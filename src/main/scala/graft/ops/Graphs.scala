@@ -246,73 +246,54 @@ object Graphs {
     * decrement arithmetic's corner cases (sequential peel waves,
     * both-endpoints-dropped edges). */
   private[ops] def kcoreOf(e0: DataFrame): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     // Rounds run over the HALF edge list (a < b, m rows) rather than
     // the symmetric adjacency (2m). Each round references the
-    // previous round's e twice (decrement build + induced filter);
-    // unpersisted, the lineage re-derives the edge build
-    // exponentially (measured on the pre-r12 shape: never finishes
-    // at sf0.1). deg/drop are node-sized single-column frames —
-    // eager localCheckpoints flatten the analyzed tree exactly as
-    // q88's layers do.
-    val caches = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    val checkpoints = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    var e = e0.persist(StorageLevel.MEMORY_AND_DISK)
-    caches += e
-    // the ONE full-graph degree aggregation (2m rows) of the query
-    var deg = e.select(col("a").as("n"))
-      .unionAll(e.select(col("b").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
-    checkpoints += deg
-    var atFixpoint = false
-    (1 to CoreRounds).foreach { _ =>
-      if (!atFixpoint) {
-        val drop = deg.filter(col("deg") < CoreK).select("n")
-          .localCheckpoint(true)
-        checkpoints += drop
-        if (drop.isEmpty) atFixpoint = true // remaining rounds are identities
-        else {
-          // decrements: each removed edge (one endpoint dropped) lowers
-          // the OTHER endpoint's degree by one; both-endpoints-dropped
-          // edges decrement rows the anti-join below discards anyway.
-          // semi/anti against the tiny drop frame → AQE broadcasts; the
-          // groupBy is the round's only exchange, sized by removed edges.
-          val dec = e.join(drop.select(col("n").as("b")), Seq("b"), "left_semi")
-            .select(col("a").as("n"))
-            .unionAll(
-              e.join(drop.select(col("n").as("a")), Seq("a"), "left_semi")
-                .select(col("b").as("n")))
-            .groupBy("n").agg(count(lit(1)).as("dec"))
-          deg = deg.join(drop, Seq("n"), "left_anti")
-            .join(dec, Seq("n"), "left")
-            .select(col("n"),
-              (col("deg") - coalesce(col("dec"), lit(0L))).as("deg"))
-            .localCheckpoint(true)
-          checkpoints += deg
-          e = e.join(drop.select(col("n").as("a")), Seq("a"), "left_anti")
-            .join(drop.select(col("n").as("b")), Seq("b"), "left_anti")
-            .select("a", "b")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          caches += e
-        }
+    // previous round's e twice (decrement build + induced filter), so
+    // e is persisted per round (measured unpersisted on the pre-r12
+    // shape: never finishes at sf0.1). deg/drop are node-sized
+    // single-column frames, checkpointed as q88's layers are.
+    Rounds.scoped { r =>
+      val e1 = r.persist(e0)
+      // the ONE full-graph degree aggregation (2m rows) of the query
+      val deg1 = r.checkpoint(e1.select(col("a").as("n"))
+        .unionAll(e1.select(col("b").as("n")))
+        .groupBy("n").agg(count(lit(1)).as("deg")))
+      val (_, degN) = Rounds.iterate((e1, deg1), CoreRounds) {
+        case ((e, deg), _) =>
+          val drop = r.checkpoint(deg.filter(col("deg") < CoreK).select("n"))
+          if (drop.isEmpty) ((e, deg), true) // remaining rounds are identities
+          else {
+            // decrements: each removed edge (one endpoint dropped) lowers
+            // the OTHER endpoint's degree by one; both-endpoints-dropped
+            // edges decrement rows the anti-join below discards anyway.
+            // semi/anti against the tiny drop frame → AQE broadcasts; the
+            // groupBy is the round's only exchange, sized by removed edges.
+            val dec = e.join(drop.select(col("n").as("b")), Seq("b"), "left_semi")
+              .select(col("a").as("n"))
+              .unionAll(
+                e.join(drop.select(col("n").as("a")), Seq("a"), "left_semi")
+                  .select(col("b").as("n")))
+              .groupBy("n").agg(count(lit(1)).as("dec"))
+            val nextDeg = r.checkpoint(deg.join(drop, Seq("n"), "left_anti")
+              .join(dec, Seq("n"), "left")
+              .select(col("n"),
+                (col("deg") - coalesce(col("dec"), lit(0L))).as("deg")))
+            val nextE = r.persist(
+              e.join(drop.select(col("n").as("a")), Seq("a"), "left_anti")
+                .join(drop.select(col("n").as("b")), Seq("b"), "left_anti")
+                .select("a", "b"))
+            ((nextE, nextDeg), false)
+          }
       }
-    }
-    // output = degrees of the final induced subgraph, which IS the
-    // maintained deg frame (the per-round invariant) minus the nodes
-    // decremented to isolation in the last round — no final 2m-row
-    // re-aggregation; the oracle's unrolled CTEs verify the invariant
-    // end-to-end every run.
-    val out = deg.filter(col("deg") > 0)
-      .select(col("n").as("part_id"), col("deg").as("core_deg"))
-      .localCheckpoint(true)
-    caches.foreach(_.unpersist(blocking = false))
-    // round checkpoints are dead once `out` materializes;
-    // Dataset.unpersist can't reach them (no CacheManager entry) —
-    // drop their LogicalRDD blocks directly
-    checkpoints.foreach(
-      org.apache.spark.sql.graftbridge.GraftBridge.unpersistCheckpoint)
-    out.orderBy(col("part_id"))
+      // output = degrees of the final induced subgraph, which IS the
+      // maintained deg frame (the per-round invariant) minus the nodes
+      // decremented to isolation in the last round — no final 2m-row
+      // re-aggregation; the oracle's unrolled CTEs verify the invariant
+      // end-to-end every run.
+      degN.filter(col("deg") > 0)
+        .select(col("n").as("part_id"), col("deg").as("core_deg"))
+        .localCheckpoint(true)
+    }.orderBy(col("part_id"))
   }
 
   /** q88: multi-source BFS — min-hop distance from a deterministic
@@ -339,39 +320,31 @@ object Graphs {
   val BfsRounds = 3
   val SeedMod = 100
 
-  def bfsHops(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+  def bfsHops(s: SparkSession, dir: String): DataFrame =
     // adj is probed every round; each layer is TINY (one row per
     // newly-reached node) and referenced by every later round's
     // anti-join AND the final union, so layers flatten with an eager
-    // localCheckpoint — same analyzed-tree bound as kcore's rounds.
-    val adj = adjacency(edges(s, dir)).persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = adj.select(col("src").as("node")).distinct()
-    var frontier = nodes.filter(col("node") % SeedMod === 0)
-      .select(col("node"), lit(0L).as("hop"))
-      .localCheckpoint(true)
-    val layers = scala.collection.mutable.ListBuffer(frontier)
-    (1 to BfsRounds).foreach { i =>
-      // reached-so-far = union of checkpoint LEAVES (flat plan; no
-      // separate reached frame to re-checkpoint each round)
-      val reached = layers.map(_.select("node")).reduce(_ unionAll _)
-      frontier = adj.join(frontier, col("src") === col("node"))
-        .select(col("dst").as("node")).distinct()
-        .join(reached, Seq("node"), "left_anti")
-        .select(col("node"), lit(i.toLong).as("hop"))
-        .localCheckpoint(true)
-      layers += frontier
-    }
-    adj.unpersist(blocking = false)
-    // every layer is live in the returned plan (the union below);
-    // checkpoint one merged result frame so the per-round blocks can
-    // be dropped eagerly instead of leaking to the terminal sweep
-    val out = layers.reduce(_ unionAll _).localCheckpoint(true)
-    layers.foreach(
-      org.apache.spark.sql.graftbridge.GraftBridge.unpersistCheckpoint)
-    out.select(col("node").as("part_id"), col("hop"))
+    // checkpoint — same analyzed-tree bound as kcore's rounds.
+    Rounds.scoped { r =>
+      val adj = r.persist(adjacency(edges(s, dir)))
+      val nodes = adj.select(col("src").as("node")).distinct()
+      val seeds = r.checkpoint(nodes.filter(col("node") % SeedMod === 0)
+        .select(col("node"), lit(0L).as("hop")))
+      val layers = (1 to BfsRounds).foldLeft(Vector(seeds)) { (ls, i) =>
+        // reached-so-far = union of checkpoint LEAVES (flat plan; no
+        // separate reached frame to re-checkpoint each round)
+        val reached = ls.map(_.select("node")).reduce(_ unionAll _)
+        ls :+ r.checkpoint(adj.join(ls.last, col("src") === col("node"))
+          .select(col("dst").as("node")).distinct()
+          .join(reached, Seq("node"), "left_anti")
+          .select(col("node"), lit(i.toLong).as("hop")))
+      }
+      // every layer is live in the returned plan (the union below);
+      // checkpoint one merged result frame so the scope can drop the
+      // per-round blocks instead of leaking them to the terminal sweep
+      layers.reduce(_ unionAll _).localCheckpoint(true)
+    }.select(col("node").as("part_id"), col("hop"))
       .orderBy("part_id")
-  }
 
   // ---------------------------------------------------------------- q134
   /** Top-k for the q134 candidate list. */
@@ -541,31 +514,27 @@ object Graphs {
     // raw score frames are NODE-sized: checkpoint before the
     // normalize so the broadcast-max build (its own job) reads the
     // materialized frame instead of re-running the half-round's
-    // incidence join — halves the data-sized joins per iteration
-    // each round's checkpoints are dead once the NEXT one
-    // materializes (eager) — unpersist all but the last so a session
-    // running many queries doesn't accumulate node-frame blocks
-    // (the q59 round-cache rule)
-    val roundCaches = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def normalize(raw0: DataFrame, key: String, v: String): DataFrame = {
-      val raw = raw0.localCheckpoint(true)
-      roundCaches += raw
+    // incidence join — halves the data-sized joins per iteration.
+    // Only the last authority frame outlives the scope: the returned
+    // plan reads it.
+    def normalize(raw: DataFrame, key: String, v: String): DataFrame =
       raw.crossJoin(broadcast(raw.agg(max(col(v)).as("mx"))))
         .select(col(key),
           expr(s"CAST(CAST($v AS DECIMAL(38,0)) * 1000000 div mx AS BIGINT)")
             .as(v.dropRight(3))) // "hraw"→"h", "araw"→"a"
+    val aN = Rounds.scoped { r =>
+      def araw(a: DataFrame): DataFrame = {
+        val hraw = r.checkpoint(cp.join(a, "pk").groupBy("cust")
+          .agg(sum("a").as("hraw")))
+        val h = normalize(hraw, "cust", "hraw")
+        r.checkpoint(cp.join(h, "cust").groupBy("pk").agg(sum("h").as("araw")))
+      }
+      val a0 = pdeg.select(col("pk"), lit(PrMass).as("a"))
+      val arawN = (2 to HitsIters).foldLeft(araw(a0)) { (prev, _) =>
+        araw(normalize(prev, "pk", "araw"))
+      }
+      normalize(r.keep(arawN), "pk", "araw")
     }
-    val a0 = pdeg.select(col("pk"), lit(PrMass).as("a"))
-    val aN = (1 to HitsIters).foldLeft(a0) { (a, _) =>
-      val hraw = cp.join(a, "pk").groupBy("cust")
-        .agg(sum("a").as("hraw"))
-      val h = normalize(hraw, "cust", "hraw")
-      val araw = cp.join(h, "cust").groupBy("pk")
-        .agg(sum("h").as("araw"))
-      normalize(araw, "pk", "araw")
-    }
-    roundCaches.dropRight(1)
-      .foreach(org.apache.spark.sql.graftbridge.GraftBridge.unpersistCheckpoint)
     aN.join(pdeg, "pk")
       .select(col("pk").as("part_id"), col("a").as("auth_ppm"),
         col("n_customers").cast("long").as("n_customers"))

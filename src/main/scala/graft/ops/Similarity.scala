@@ -455,28 +455,17 @@ object Similarity {
     // + update's keep-prev), so an unpersisted fold embeds 2^rounds
     // copies of every round's N-scale window/filter in the final plan
     // (ReusedExchange dedupes only the exchanges, not the operators
-    // above them). The centroid frame is K rows — localCheckpoint(true)
-    // materializes it for pennies each round and keeps the plan flat,
-    // the same round-lineage rule as q52/q87/q95.
-    // Rounds are tracked so the intermediates can be DROPPED: each
-    // localCheckpoint(true) registers a K-row RDD with the cache
-    // manager for the session's lifetime, and eager materialization
-    // means round r's blocks are dead the moment round r+1's checkpoint
-    // lands. Only the FINAL centroid frame must survive — the returned
-    // assignment reads its blocks lazily (q95 round-cache pattern).
-    val rounds = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    val finalCent = (1 to KmIters).foldLeft {
-      val c0 = init.localCheckpoint(true); rounds += c0; c0
-    } { (cent, _) =>
-      val nxt = update(assign(cent), cent).localCheckpoint(true)
-      rounds += nxt; nxt
+    // above them). The centroid frame is K rows — a checkpoint
+    // materializes it for pennies each round and keeps the plan flat.
+    // Only the FINAL centroid frame outlives the scope: the returned
+    // assignment reads its blocks lazily.
+    Rounds.scoped { r =>
+      val finalCent = (1 to KmIters).foldLeft(r.checkpoint(init)) { (cent, _) =>
+        r.checkpoint(update(assign(cent), cent))
+      }
+      assign(r.keep(finalCent))
+        .select(col("vec_id"), col("q"), col("k"), col("d"))
     }
-    // Dataset.unpersist is a no-op on checkpointed frames (no
-    // CacheManager entry); drop the LogicalRDD leaf's blocks directly
-    rounds.dropRight(1)
-      .foreach(org.apache.spark.sql.graftbridge.GraftBridge.unpersistCheckpoint)
-    assign(finalCent)
-      .select(col("vec_id"), col("q"), col("k"), col("d"))
   }
 
   /** q59's public shape: the final assignment with its exact distance. */
@@ -890,7 +879,7 @@ object Similarity {
       // empty corpus → no cells (matches the posexplode shape and the
       // oracle's DISTINCT-over-empty), not a D²-cell zero matrix
       .filter(element_at(col("buf"), lit(T + D + 1)) > 0)
-    val cov = census
+    val cells = census
       .select(col("buf"), explode(sequence(lit(0), lit(D * D - 1))).as("id"))
       .selectExpr("buf", s"CAST(id div $D AS INT) AS i",
         s"CAST(id % $D AS INT) AS j")
@@ -906,26 +895,24 @@ object Similarity {
            |      + (greatest(i, j) - least(i, j)) + 1 AS INT))
            |- CAST(element_at(buf, ${T + 1} + i) AS DECIMAL(38,0))
            |  * element_at(buf, ${T + 1} + j) AS c""".stripMargin)
-      .localCheckpoint(true) // D² cells; rounds + their max builds read it
-    val x0 = cov.select(col("j")).distinct()
-      .select(col("j"), lit(1000000L).cast("decimal(38,0)").as("x"))
     // each round's y is D rows but referenced twice (value + max) and
     // compounds 2^rounds without a checkpoint (measured: the plan
-    // grew to 126 exchanges); the q59 round-cache rule applies — keep
-    // only the last round's frame alive for the returned lazy plan
-    val roundCaches = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    val xN = (1 to PowIters).foldLeft(x0) { (x, _) =>
-      val y = cov.join(x, "j").groupBy("i")
-        .agg(sum(expr("c * x")).as("y"))
-        .localCheckpoint(true)
-      roundCaches += y
+    // grew to 126 exchanges); only the last round's frame outlives
+    // the scope, for the returned lazy plan
+    def normalize(y: DataFrame): DataFrame =
       y.crossJoin(broadcast(y.agg(max(abs(col("y"))).as("my"))))
         .select(col("i").as("j"),
           expr("CAST(y * 1000000 div greatest(my, 1) AS DECIMAL(38,0))")
             .as("x"))
+    val xN = Rounds.scoped { r =>
+      val cov = r.checkpoint(cells) // D² cells; rounds + their max builds read it
+      val x0 = cov.select(col("j")).distinct()
+        .select(col("j"), lit(1000000L).cast("decimal(38,0)").as("x"))
+      def round(x: DataFrame): DataFrame =
+        r.checkpoint(cov.join(x, "j").groupBy("i").agg(sum(expr("c * x")).as("y")))
+      val yN = (2 to PowIters).foldLeft(round(x0)) { (y, _) => round(normalize(y)) }
+      normalize(r.keep(yN))
     }
-    roundCaches.dropRight(1)
-      .foreach(org.apache.spark.sql.graftbridge.GraftBridge.unpersistCheckpoint)
     xN.select(col("j").cast("long").as("dim"),
         col("x").cast("long").as("component_ppm"))
       .orderBy("dim")

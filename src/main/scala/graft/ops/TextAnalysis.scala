@@ -259,7 +259,6 @@ object TextAnalysis {
 
   private def bpeRoundsUncached(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
-    import org.apache.spark.storage.StorageLevel
     val vocab = Tables.documents(s, dir)
       .select(explode(words(col("text"))).as("word"))
       .filter(col("word").rlike("^[a-z0-9]+$"))
@@ -281,37 +280,32 @@ object TextAnalysis {
         .limit(1)
     }
 
-    val caches = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    var seq = seq0.persist(StorageLevel.MEMORY_AND_DISK)
-    caches += seq
-    val merges = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    var r = 1
-    var exhausted = false
-    while (r <= BpeRounds && !exhausted) {
-      val top1 = pairTop1(seq).localCheckpoint(true) // ≤1 row, eager
-      merges += top1.select(lit(r.toLong).as("merge_round"),
-        col("a").as("sym_a"), col("b").as("sym_b"), col("pair_count"),
-        concat(col("a"), col("b")).as("new_sym"))
-      if (top1.isEmpty) {
-        // no adjacent pair anywhere: every word is one symbol. The
-        // vocabulary must SURVIVE (a crossJoin with the empty winner
-        // would wipe it and q96 would mis-charge every in-vocab word
-        // as OOV); later rounds can only be empty too, so stop.
-        exhausted = true
-      } else {
-        seq = seq.crossJoin(broadcast(top1))
-          .select(col("word"), col("freq"),
-            expr("replace(seq, concat('|', a, '||', b, '|'), " +
-              "concat('|', a, b, '|'))").as("seq"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        caches += seq
+    // each round's seq is persisted while the next round's jobs run;
+    // the merge table reads every round's 1-row winner, so those
+    // checkpoints outlive the scope
+    Rounds.scoped { r =>
+      val (seqN, merges) = Rounds.iterate(
+          (r.persist(seq0), Vector.empty[DataFrame]), BpeRounds) {
+        case ((seq, merges), round) =>
+          val top1 = r.keep(r.checkpoint(pairTop1(seq))) // ≤1 row, eager
+          val merged = merges :+ top1.select(lit(round.toLong).as("merge_round"),
+            col("a").as("sym_a"), col("b").as("sym_b"), col("pair_count"),
+            concat(col("a"), col("b")).as("new_sym"))
+          // no adjacent pair anywhere: every word is one symbol. The
+          // vocabulary must SURVIVE (a crossJoin with the empty winner
+          // would wipe it and q96 would mis-charge every in-vocab word
+          // as OOV); later rounds can only be empty too, so stop.
+          if (top1.isEmpty) ((seq, merged), true)
+          else {
+            val next = r.persist(seq.crossJoin(broadcast(top1))
+              .select(col("word"), col("freq"),
+                expr("replace(seq, concat('|', a, '||', b, '|'), " +
+                  "concat('|', a, b, '|'))").as("seq")))
+            ((next, merged), false)
+          }
       }
-      r += 1
+      (merges.reduce(_.union(_)).orderBy("merge_round"), seqN.localCheckpoint(true))
     }
-    val mergeTable = merges.reduce(_.union(_)).orderBy("merge_round")
-    val finalSeq = seq.localCheckpoint(true)
-    caches.foreach(_.unpersist(blocking = false))
-    (mergeTable, finalSeq)
   }
 
   // ---------------------------------------------------------------- q96

@@ -76,9 +76,9 @@ object GraftBridge {
     * registers none; the materialized blocks live on the internal RDD
     * wrapped by the plan's `LogicalRDD` leaf (measured: after
     * checkpoint + unpersist, `sparkContext.getPersistentRDDs` still
-    * holds the RDD). Round-cache eviction (q59/q167/q182) must reach
-    * through the leaf and unpersist THAT RDD. Returns true when a
-    * checkpointed leaf was found and dropped.
+    * holds the RDD). [[graft.ops.Rounds]], its only caller, releases
+    * its round checkpoints through the leaf's RDD here. Returns true
+    * when a checkpointed leaf was found and dropped.
     *
     * CONTRACT: pass only a frame that IS a checkpoint result — i.e.
     * whose ROOT plan node is the `LogicalRDD` the checkpoint produced.

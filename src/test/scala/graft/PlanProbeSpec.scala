@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.functions._
 
 /** The runtime-plan census behind `runMain graft.PlanProbe` — the
@@ -57,11 +59,22 @@ class PlanProbeSpec extends SparkTestBase {
 
   private val probeSf = "/root/testdata/sf0.1"
 
+  /** Each query's full (cached-inclusive) census per execution, probed
+    * once per suite: a query's join, scan and action pins all read the
+    * same run. */
+  private val probes = mutable.Map.empty[String, Seq[(String, String)]]
+  private def probed(name: String): Seq[(String, String)] =
+    probes.getOrElseUpdate(name,
+      PlanProbe.probe(spark, name, probeSf, full = true))
+
+  /** The live (non-cached) operator tokens of a full census. */
+  private def live(census: String): Seq[String] =
+    census.split(" ").toSeq.filterNot(_.startsWith("cached:"))
+
   /** Live join-operator class names per execution. */
   private def joinSets(name: String): Seq[(String, Set[String])] =
-    PlanProbe.probe(spark, name, probeSf).map { case (fn, census) =>
-      fn -> census.split(" ").toSeq
-        .filter(t => t.contains("Join") && !t.startsWith("cached:"))
+    probed(name).map { case (fn, census) =>
+      fn -> live(census).filter(_.contains("Join"))
         .map(_.takeWhile(_ != '×')).toSet
     }
 
@@ -83,9 +96,8 @@ class PlanProbeSpec extends SparkTestBase {
   /** Per-execution live join-operator counts (name → multiplicity),
     * parsed from the census's `Name×k` tokens. */
   private def joinCounts(name: String): Seq[(String, Map[String, Int])] =
-    PlanProbe.probe(spark, name, probeSf).map { case (fn, census) =>
-      fn -> census.split(" ").toSeq
-        .filter(t => t.contains("Join") && !t.startsWith("cached:"))
+    probed(name).map { case (fn, census) =>
+      fn -> live(census).filter(_.contains("Join"))
         .map { t =>
           val (n, k) = t.span(_ != '×')
           n -> (if (k.isEmpty) 1 else k.drop(1).toInt)
@@ -112,8 +124,7 @@ class PlanProbeSpec extends SparkTestBase {
     // executes when the cache materializes, so the live census reports
     // the noop write as join-free — audit the FULL (cached-inclusive)
     // node census instead, stripping the cached: prefix
-    val joins = PlanProbe.probe(spark, "q28_minhash_lsh_pairs", probeSf,
-        full = true)
+    val joins = probed("q28_minhash_lsh_pairs")
       .flatMap(_._2.split(" "))
       .map(_.stripPrefix("cached:").takeWhile(_ != '×'))
       .filter(_.contains("Join")).toSet
@@ -144,7 +155,8 @@ class PlanProbeSpec extends SparkTestBase {
     // any strategy (on peeling inputs the drop-set joins exist but
     // must broadcast; GraphsSpec's synthetic peel covers that
     // semantics, this pins the no-peel plan the benchmark measures).
-    val censuses = PlanProbe.probe(spark, "q87_kcore", probeSf)
+    val censuses = probed("q87_kcore")
+      .map { case (fn, c) => fn -> live(c).mkString(" ") }
     assert(censuses.size >= 2,
       s"k-core must at least aggregate degrees and probe the drop set: " +
         s"$censuses")
@@ -203,7 +215,7 @@ class PlanProbeSpec extends SparkTestBase {
 
   /** (execution label, live scan count, cached scan present) rows. */
   private def scanRows(name: String): Seq[(String, Int, Boolean)] =
-    PlanProbe.probe(spark, name, probeSf, full = true).map {
+    probed(name).map {
       case (fn, census) =>
         val toks = census.split(" ")
         def count(p: String) = toks.filter(_.startsWith(p)).map { t =>
@@ -269,8 +281,7 @@ class PlanProbeSpec extends SparkTestBase {
     // census per reference (96 static parquet scans) and only AQE
     // exchange reuse kept it cheap — this pins the fixed shape so a
     // dropped checkpoint is a red test, not a bench surprise.
-    val execs = PlanProbe.probe(spark, "q168_textrank", probeSf,
-      full = true)
+    val execs = probed("q168_textrank")
     val scanning = execs.filter(_._2.contains("FileSourceScanExec"))
     assert(scanning.map(_._1) == Seq("localCheckpoint"),
       s"exactly one execution — the census checkpoint — may scan " +
@@ -278,5 +289,68 @@ class PlanProbeSpec extends SparkTestBase {
           fn -> c.split(" ").filter(_.startsWith("FileSourceScan"))
             .mkString(",")
         }}")
+  }
+
+  // ---- the Rounds-ported queries: each runs the same executions, in
+  // the same order, as before the port (RUNTIME_PLANS.txt's action
+  // column agrees), and the scan-locality pins below say which of
+  // them may read parquet live.
+
+  private def lc(n: Int) = Seq.fill(n)("localCheckpoint")
+
+  private val roundActions = Seq(
+    "q52_dedup_clusters" -> Seq("isEmpty", "isEmpty", "localCheckpoint", "overwrite"),
+    "q56_dedup_clusters_ls" -> Seq("count", "localCheckpoint", "overwrite"),
+    "q59_kmeans" -> (lc(4) :+ "overwrite"),
+    "q93_sem_dedup" -> (lc(4) :+ "overwrite"),
+    "q87_kcore" -> Seq("localCheckpoint", "localCheckpoint", "isEmpty",
+      "localCheckpoint", "overwrite"),
+    "q88_bfs_hops" -> (lc(5) :+ "overwrite"),
+    "q95_bpe_merges" -> (Seq.fill(6)(Seq("localCheckpoint", "isEmpty")).flatten ++
+      Seq("localCheckpoint", "overwrite")),
+    "q167_hits" -> (lc(5) :+ "overwrite"),
+    "q182_power_iteration" -> (lc(6) :+ "overwrite"))
+
+  test("iterative queries run their pinned execution action sequences at sf0.1") {
+    val got = roundActions.map { case (q, _) => q -> probed(q).map(_._1) }
+    assert(got == roundActions)
+  }
+
+  test("q52 CC: no execution scans files live — every round reads the persisted labels") {
+    val rows = scanRows("q52_dedup_clusters")
+    assert(rows.forall(_._2 == 0) && rows.exists(_._3),
+      s"q52 rounds must read the persisted label/edge frames, never " +
+        s"parquet; got $rows")
+  }
+
+  test("q56 CC: only the terminal write scans files live — the rounds read the persisted edges") {
+    // the terminal write joins the documents table for the singletons
+    val rows = scanRows("q56_dedup_clusters_ls")
+    assert(rows.filter(_._2 > 0).map(_._1) == Seq("overwrite") &&
+      rows.init.forall(_._3),
+      s"only q56's terminal write may scan files; got $rows")
+  }
+
+  test("q59 k-means: every execution scans the embeddings exactly once") {
+    // each round's assign reads the vectors live; a second scan in a
+    // round means it re-derived an earlier centroid frame
+    val rows = scanRows("q59_kmeans")
+    assert(rows.map(_._2) == Seq.fill(5)(1),
+      s"each q59 execution must scan the embeddings once; got $rows")
+  }
+
+  test("q95 BPE: no execution scans files live — every round reads the persisted vocabulary") {
+    val rows = scanRows("q95_bpe_merges")
+    assert(rows.forall(_._2 == 0) && rows.exists(_._3),
+      s"q95 rounds must read the persisted vocabulary, never parquet; " +
+        s"got $rows")
+  }
+
+  test("q182 power iteration: only the covariance checkpoint scans the corpus") {
+    val rows = scanRows("q182_power_iteration")
+    val scanning = rows.filter(_._2 > 0)
+    assert(scanning.map(_._1) == Seq("localCheckpoint") &&
+      scanning == rows.take(1).filter(_._2 > 0),
+      s"only q182's first (covariance) checkpoint may scan files; got $rows")
   }
 }
