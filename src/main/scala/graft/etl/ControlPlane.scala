@@ -103,22 +103,13 @@ final class JsonlControlStore(path: String) extends ControlStore {
 /** Reference-faithful JDBC control store (Postgres `db_control`).
   * Driver-side `java.sql` — K4–K7 need upsert/UPDATE, which Spark's
   * insert-only JDBC writer cannot express. Compiles against plain JDK;
-  * requires a JDBC driver on the classpath at runtime. */
+  * requires a JDBC driver on the classpath at runtime and, like the
+  * reference, an existing `file_log` table. */
 final class JdbcControlStore(url: String, props: java.util.Properties)
     extends ControlStore {
   private def withConn[A](f: java.sql.Connection => A): A = {
     val c = java.sql.DriverManager.getConnection(url, props)
     try f(c) finally c.close()
-  }
-
-  def ensureSchema(): Unit = withConn { c =>
-    c.createStatement().execute(
-      """CREATE TABLE IF NOT EXISTS file_log (
-        | file_name text PRIMARY KEY,
-        | status text DEFAULT 'NEW',
-        | row_count bigint DEFAULT 0,
-        | error_message text,
-        | last_updated timestamp)""".stripMargin)
   }
 
   override def register(fileNames: Seq[String]): Unit = withConn { c =>

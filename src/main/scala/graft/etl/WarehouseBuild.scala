@@ -98,66 +98,6 @@ object WarehouseBuild {
     obs.get("rows").asInstanceOf[Long]
   }
 
-  /** Small-file compaction for the partitioned warehouse. Streaming /
-    * hourly appends leave each `event_date` partition with one file
-    * per task per batch; at 1000 executors × 24 loads that is tens of
-    * thousands of files a day, and file-listing + per-file open costs
-    * come to dominate every scan. Compaction rewrites each partition
-    * into `ceil(partition_bytes / targetBytes)` files.
-    *
-    * Mechanics: per-partition file sizes come from the driver-side
-    * file listing (O(files) metadata — the same scale class as the
-    * control plane); each row gets a salt in `[0, nFiles(date))` and
-    * the frame is repartitioned by (date, salt), so each output task
-    * holds approximately one (partition, salt) slice ≈ one target-sized
-    * file — hash partitioning can collide two slices into one task, so
-    * occasional files run up to ~2× target and the file count is a
-    * ceiling, not exact; good enough for the goal (thousands of small
-    * files → a handful of large ones). The rewrite reads through
-    * `localCheckpoint` — the
-    * materialized working set, not the input files — so dynamic
-    * partition overwrite of the SAME directory is safe from the
-    * read-overwrite race; a production deployment writes to a new
-    * location and swaps pointers instead (object stores don't rename
-    * atomically), which is a sink-path change, not a plan change. */
-  def compact(spark: SparkSession, warehouseDir: String,
-      targetBytes: Long = 128L * 1024 * 1024): Long = {
-    val fs = new org.apache.hadoop.fs.Path(warehouseDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(new org.apache.hadoop.fs.Path(warehouseDir))
-      .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-    if (parts.isEmpty) return 0L
-    val plan = parts.map { p =>
-      val bytes = fs.listStatus(p.getPath)
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map(_.getLen).sum
-      val value = p.getPath.getName.split("=", 2)(1)
-      value -> math.max(1L, (bytes + targetBytes - 1) / targetBytes)
-    }.toMap
-    val totalFiles = plan.values.sum
-    val nFilesFor = plan.foldLeft(lit(1L)) { case (acc, (v, n)) =>
-      // the null partition's directory value is the Hive sentinel, but
-      // the COLUMN is null there — an equality against the sentinel
-      // string can never match it (null comparison), so the null
-      // partition needs its own isNull branch or it all lands in one
-      // task regardless of size
-      if (v == "__HIVE_DEFAULT_PARTITION__")
-        when(col("event_date").isNull, lit(n)).otherwise(acc)
-      else when(col("event_date").cast("string") === v, lit(n)).otherwise(acc)
-    }
-    val df = table(spark, warehouseDir).localCheckpoint(true)
-    df
-      .withColumn("__salt", pmod(xxhash64(col("icao24"), col("time_position")),
-        nFilesFor))
-      .repartition(totalFiles.toInt, col("event_date"), col("__salt"))
-      .drop("__salt")
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("event_date")
-      .parquet(warehouseDir)
-    totalFiles
-  }
-
   /** Diagram stage 6 — "Load to data mart script": load the aggregate
     * artifact into the mart table. Same dynamic-overwrite discipline:
     * partitions present in the aggregate replace their mart

@@ -19,10 +19,8 @@ import graft.Tables
   *    digest-routed media_type/width/height — pure codegen'd
   *    expressions over the binary column, mirrored in DuckDB.
   *  - q37 feature extraction: fixed-width integer feature vector per
-  *    payload. Expression form feeds the oracle; the SAME kernel runs
-  *    through the [[MediaPipeline]] `mapPartitions` seam where a real
-  *    decoder (JNI codec, ONNX session) would sit, and a test pins
-  *    mapPartitions ≡ expression.
+  *    payload, as one expression that the oracle mirrors. A real
+  *    decoder (JNI codec, ONNX session) would replace this kernel.
   *  - q38 frame sampling: N equal byte-range "frames" per payload with
   *    per-frame digests — the substring-on-binary slice pattern used
   *    for video keyframe / audio window sampling.

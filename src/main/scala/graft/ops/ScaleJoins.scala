@@ -5,38 +5,11 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
-/** Scale-join techniques: bucketing (shuffle-free co-located joins for
-  * tables joined repeatedly on the same key) and salting (splitting
-  * hot keys AQE's skew handling can't reach, e.g. inside aggregations).
-  *
-  * Bucketing: writing both sides bucketed by the join key with the
-  * same bucket count pins their physical layout to
-  * `hashpartitioning(key, n)`; every later equi-join or aggregation on
-  * that key runs with ZERO exchange — at 100 TB this converts the
-  * dominant repeated shuffle of a fact table into a one-time write
-  * cost. Verified by test: the bucketed join plan contains no shuffle.
+/** Scale techniques for skewed keys and shard placement: salting
+  * (splitting hot keys AQE's skew handling can't reach, e.g. inside
+  * aggregations, q92) and the shard-balance audit (q180).
   */
 object ScaleJoins {
-
-  /** Persist `df` bucketed by `key` into `n` buckets as a managed
-    * table (parquet). Later joins/aggs on `key` between tables
-    * bucketed with the same `n` are exchange-free. */
-  def writeBucketed(df: DataFrame, table: String, key: String, n: Int): Unit =
-    df.write.mode("overwrite")
-      .format("parquet")
-      .bucketBy(n, key)
-      .sortBy(key)
-      .saveAsTable(table)
-
-  /** Exchange-free equi-join of two co-bucketed tables. MERGE hinted:
-    * at test scale the planner would pick broadcast and skip bucketed
-    * reading entirely ("Bucketed: false, disabled by query planner");
-    * at 100 TB neither side broadcasts and sort-merge over co-located
-    * buckets is exactly the plan this layout exists for. */
-  def bucketedJoin(spark: SparkSession, left: String, right: String,
-      key: String): DataFrame =
-    spark.table(left).hint("merge")
-      .join(spark.table(right).hint("merge"), Seq(key))
 
   /** Deterministic content-derived salt. NOT spark_partition_id or
     * monotonically_increasing_id: those change across task retries, and
@@ -64,19 +37,6 @@ object ScaleJoins {
       .agg(count(lit(1)).as("__c"), sum(col(valueCol)).as("__s"))
       .groupBy(col(key))
       .agg(sum("__c").as("n_rows"), sum("__s").as("sum_value"))
-  }
-
-  /** Salted join: replicate the small side `saltFactor`× and salt the
-    * big side's key, so one hot key fans across `saltFactor` tasks.
-    * For when the small side is too big to broadcast but the big side
-    * has hot keys; AQE skew-join only splits at shuffle boundaries it
-    * can see — this works inside any topology. */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String,
-      saltFactor: Int): DataFrame = {
-    val saltedBig = big.withColumn("__salt", contentSalt(big, saltFactor))
-    val replicatedSmall = small.withColumn("__salt",
-      explode(sequence(lit(0), lit(saltFactor - 1))))
-    saltedBig.join(replicatedSmall, Seq(key, "__salt")).drop("__salt")
   }
 
   // -------------------------------------------------------------- q92

@@ -95,7 +95,6 @@ object OpenSkyStatesSource {
   private val backends = scala.collection.concurrent.TrieMap.empty[String, HttpBackend]
 
   def registerBackend(name: String, b: HttpBackend): Unit = backends.update(name, b)
-  def unregisterBackend(name: String): Unit = backends.remove(name)
 
   private[sources] def backendFor(opts: Map[String, String]): HttpBackend =
     opts.get("backend") match {

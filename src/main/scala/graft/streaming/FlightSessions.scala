@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -42,8 +41,9 @@ object FlightSessions {
 
   /** Microsecond event time. FlightStates emits fractional-second
     * (microsecond) timestamps, so gaps are compared in micros —
-    * exactly like sessionsBatch; a millis comparison would close
-    * boundary gaps (e.g. 1800000.4 ms) differently on the two paths.
+    * exactly like the spec's batch mirror `sessionsBatch`; a millis
+    * comparison would close boundary gaps (e.g. 1800000.4 ms)
+    * differently on the two paths.
     * (The `% 1000` keeps only the sub-millisecond nanos `getTime`
     * hasn't already counted.) */
   private[streaming] def us(t: Timestamp): Long =
@@ -102,57 +102,5 @@ object FlightSessions {
       .groupByKey(_.icao24)
       .flatMapGroupsWithState[OpenSessions, FlightSession](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(fn)
-  }
-
-  /** The same sessionization through Spark's BUILT-IN
-    * `session_window` aggregation — the tier-(a) form: one gap-merged
-    * window aggregate, no custom state function, and it runs on a
-    * stream (watermark + append mode) or a batch frame unchanged.
-    *
-    * Kept beside [[sessionsStream]] deliberately: the builtin cannot
-    * express custom close rules (emit-on-close side effects, close
-    * conditions beyond the gap), which is exactly when
-    * `flatMapGroupsWithState` earns its complexity. Prefer THIS form
-    * when plain gap sessions are all that's needed.
-    *
-    * Boundary semantics MATCH [[sessionsBatch]]: `session_window`
-    * merges an event whose distance from the previous is ≤ `gap`
-    * (windows touch-merge), exactly the lag formulation's strict-`>`
-    * split rule — the spec pins the exact-boundary case and full
-    * fixture equivalence. */
-  def sessionsWindowed(clean: DataFrame, gapMinutes: Int = 30): DataFrame =
-    clean
-      .filter(col("icao24").isNotNull && col("time_position").isNotNull)
-      .select(col("icao24"), col("time_position").as("ts"))
-      .groupBy(col("icao24"),
-        session_window(col("ts"), s"$gapMinutes minutes"))
-      .agg(min("ts").as("session_start"), max("ts").as("session_end"),
-        count(lit(1)).as("n_states"))
-      .select("icao24", "session_start", "session_end", "n_states")
-
-  /** Batch mirror (lag → gap flag → cumulative session id → group):
-    * the sessions the stream emits must be exactly a subset of these,
-    * and every data-closed session must appear. */
-  def sessionsBatch(clean: DataFrame, gapMinutes: Int = 30): DataFrame = {
-    val byKey = Window.partitionBy("icao24").orderBy("ts")
-    clean
-      .filter(col("icao24").isNotNull && col("time_position").isNotNull)
-      .select(col("icao24"), col("time_position").as("ts"))
-      .withColumn("prev", lag("ts", 1).over(byKey))
-      .withColumn("new_s",
-        // gap compared in MICROseconds: FlightStates emits fractional-
-        // second timestamps, and the stream side compares millis — a
-        // whole-second cast here would truncate and close sessions the
-        // batch mirror keeps open, breaking the stream ⊆ batch invariant
-        (col("prev").isNull ||
-          unix_micros(col("ts")) - unix_micros(col("prev")) >
-            gapMinutes * 60L * 1000000L)
-          .cast("int"))
-      .withColumn("sid", sum("new_s").over(
-        byKey.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy("icao24", "sid")
-      .agg(min("ts").as("session_start"), max("ts").as("session_end"),
-        count(lit(1)).as("n_states"))
-      .select("icao24", "session_start", "session_end", "n_states")
   }
 }

@@ -79,28 +79,4 @@ object FlightStream {
       .agg(count(lit(1)).as("n_states"))
       .select(col("window.start").as("window_start"),
         col("origin_country"), col("n_states"))
-
-  /** Batch mirror of [[airborneCountsStream]] for differential tests:
-    * the closed-window subset of the streaming result must equal this
-    * on any static input. */
-  def airborneCountsBatch(clean: DataFrame): DataFrame =
-    clean
-      .filter(col("on_ground") === false && col("time_position").isNotNull)
-      .groupBy(window(col("time_position"), "1 hour"),
-        col("origin_country"))
-      .agg(count(lit(1)).as("n_states"))
-      .select(col("window.start").as("window_start"),
-        col("origin_country"), col("n_states"))
-
-  /** Stream-static enrichment join — the remaining §2.8 streaming
-    * query shape: each micro-batch of the cleaned stream left-joins a
-    * static dimension (e.g. a country→region lookup) keyed on
-    * `origin_country`. Stateless: no watermark, no state store — Spark
-    * re-plans the static side per micro-batch, and a dimension this
-    * small broadcasts, so enrichment adds zero shuffles to the stream.
-    * Left-outer keeps states whose country is missing from the dim
-    * (they pass through with null enrichment columns, the same outer
-    * contract as the batch join). */
-  def enrichStream(clean: DataFrame, countryDim: DataFrame): DataFrame =
-    clean.join(broadcast(countryDim), Seq("origin_country"), "left")
 }

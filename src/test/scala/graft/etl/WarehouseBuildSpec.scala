@@ -1,6 +1,8 @@
 package graft.etl
 
 import graft.{SparkTestBase, Views}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 /** Warehouse layout: date partitioning, partition pruning, SQL views. */
@@ -30,6 +32,14 @@ class WarehouseBuildSpec extends SparkTestBase {
     assert(pf.contains("event_date"), s"expected event_date in $pf")
     val rows = q.collect()
     assert(rows.nonEmpty)
+    // the scan opened exactly the two matching partitions' files; the
+    // plan has exchanges, so its scans sit inside AQE's final plan
+    val scanned = new AdaptiveSparkPlanHelper {}.collect(q.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s.metrics("numFiles").value
+    }.sum
+    def parquetFiles(date: String): Long = new java.io.File(s"$whDir/event_date=$date")
+      .listFiles().count(_.getName.endsWith(".parquet")).toLong
+    assert(scanned === parquetFiles("2025-11-12") + parquetFiles("2025-11-13"))
     assert(rows.forall { r =>
       val d = r.getDate(0).toString
       d >= "2025-11-12" && d <= "2025-11-13"
@@ -44,39 +54,6 @@ class WarehouseBuildSpec extends SparkTestBase {
     assert(q.join(expect, Seq("event_date", "origin_country", "n_aircraft", "n_states"),
       "left_anti").count() === 0)
     assert(expect.count() === rows.length.toLong)
-  }
-
-  test("compaction shrinks per-partition file counts without changing content") {
-    val d = tmpDir("wh-compact")
-    // three appends of a deliberately over-partitioned frame → many
-    // small files in every date partition
-    val clean = FlightStates.cleanFromDir(spark, fixturesDir)
-    (1 to 3).foreach(_ => WarehouseBuild.load(clean.repartition(8), d))
-    def filesPerPartition(): Map[String, Int] =
-      new java.io.File(d).listFiles().filter(_.getName.startsWith("event_date="))
-        .map(p => p.getName ->
-          p.listFiles().count(_.getName.endsWith(".parquet"))).toMap
-    val before = filesPerPartition()
-    assert(before.values.exists(_ >= 3), s"precondition: small files, got $before")
-    val content = WarehouseBuild.table(spark, d).collect()
-
-    val written = WarehouseBuild.compact(spark, d) // default target ≫ data
-    val after = filesPerPartition()
-    assert(after.keySet === before.keySet, "partition layout preserved")
-    assert(after.values.forall(_ === 1),
-      s"tiny partitions compact to one file each, got $after")
-    assert(written === after.size.toLong)
-    val recontent = WarehouseBuild.table(spark, d).collect()
-    assert(recontent.length === content.length)
-    // cell-exact content preservation, null-safe
-    val k = content.map(_.toString).sorted.toSeq
-    assert(recontent.map(_.toString).sorted.toSeq === k)
-
-    // a small target splits the biggest partition into multiple files
-    val tiny = WarehouseBuild.compact(spark, d, targetBytes = 4096)
-    assert(tiny > after.size.toLong, "smaller target → more files planned")
-    assert(filesPerPartition().values.exists(_ > 1))
-    assert(WarehouseBuild.table(spark, d).count() === content.length.toLong)
   }
 
   test("load rejects a renamed or a retyped column, naming the mismatch") {

@@ -3,8 +3,7 @@ package graft.ops
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
-/** Multimodal plumbing: metadata determinism, decoder-seam parity with
-  * the expression kernel, batching behavior, frame-slice coverage. */
+/** Multimodal plumbing: metadata determinism and frame-slice coverage. */
 class MultiModalSpec extends SparkTestBase {
 
   private val dir = "/root/testdata/sf0.001"
@@ -23,30 +22,6 @@ class MultiModalSpec extends SparkTestBase {
       .select(col("doc_id"), length(encode(col("text"), "UTF-8")).cast("long").as("b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     m.foreach(r => assert(r.getAs[Long]("n_bytes") === n(r.getAs[Long]("doc_id"))))
-  }
-
-  test("decoder seam: mapPartitions StubDecoder ≡ the expression kernel") {
-    val viaExpr = MultiModal.mmFeatures(spark, dir).collect()
-      .map(r => r.getAs[Long]("doc_id") ->
-        (0 until MultiModal.FeatureDim).map(i => r.getAs[Long](s"f$i")).toSeq).toMap
-    val viaSeam = MediaPipeline.extractFeatures(
-      MediaPipeline.mediaDataset(spark, dir), StubDecoder, batchSize = 7)
-      .collect().map(f => f.doc_id -> f.features.toSeq).toMap
-    assert(viaSeam === viaExpr)
-  }
-
-  test("decoder seam preserves partitioning and sees bounded batches") {
-    val ds = MediaPipeline.mediaDataset(spark, dir).repartition(3)
-    var seen = Set.empty[Int]
-    val batchSpy = new MediaDecoder {
-      override def decodeBatch(ps: Seq[Array[Byte]]): Seq[Array[Long]] = {
-        seen += ps.size // driver-side only in local mode; bound check below
-        StubDecoder.decodeBatch(ps)
-      }
-    }
-    val out = MediaPipeline.extractFeatures(ds, batchSpy, batchSize = 5)
-    assert(out.rdd.getNumPartitions === 3)
-    assert(out.count() === ds.count())
   }
 
   test("q38 frames tile the payload prefix without overlap") {

@@ -2,6 +2,8 @@ package graft.streaming
 
 import graft.SparkTestBase
 import graft.etl.FlightStates
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -15,6 +17,47 @@ class FlightSessionsSpec extends SparkTestBase {
     d
   }
 
+  /** Batch mirror (lag → gap flag → cumulative session id → group):
+    * the sessions the stream emits must be exactly a subset of these,
+    * and every data-closed session must appear. */
+  private def sessionsBatch(clean: DataFrame, gapMinutes: Int = 30): DataFrame = {
+    val byKey = Window.partitionBy("icao24").orderBy("ts")
+    clean
+      .filter(col("icao24").isNotNull && col("time_position").isNotNull)
+      .select(col("icao24"), col("time_position").as("ts"))
+      .withColumn("prev", lag("ts", 1).over(byKey))
+      .withColumn("new_s",
+        // gap compared in MICROseconds: FlightStates emits fractional-
+        // second timestamps, and the stream side compares micros — a
+        // whole-second cast here would truncate and close sessions the
+        // batch mirror keeps open, breaking the stream ⊆ batch invariant
+        (col("prev").isNull ||
+          unix_micros(col("ts")) - unix_micros(col("prev")) >
+            gapMinutes * 60L * 1000000L)
+          .cast("int"))
+      .withColumn("sid", sum("new_s").over(
+        byKey.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .groupBy("icao24", "sid")
+      .agg(min("ts").as("session_start"), max("ts").as("session_end"),
+        count(lit(1)).as("n_states"))
+      .select("icao24", "session_start", "session_end", "n_states")
+  }
+
+  /** The same sessionization through Spark's built-in `session_window`
+    * aggregation. Its boundary semantics match [[sessionsBatch]]:
+    * `session_window` merges an event whose distance from the previous
+    * is ≤ `gap` (windows touch-merge), exactly the lag formulation's
+    * strict-`>` split rule. */
+  private def sessionsWindowed(clean: DataFrame, gapMinutes: Int = 30): DataFrame =
+    clean
+      .filter(col("icao24").isNotNull && col("time_position").isNotNull)
+      .select(col("icao24"), col("time_position").as("ts"))
+      .groupBy(col("icao24"),
+        session_window(col("ts"), s"$gapMinutes minutes"))
+      .agg(min("ts").as("session_start"), max("ts").as("session_end"),
+        count(lit(1)).as("n_states"))
+      .select("icao24", "session_start", "session_end", "n_states")
+
   test("streamed sessions ⊆ batch mirror; every data-closed session emits") {
     val clean = spark.read.parquet(cleanDir)
     val stream = spark.readStream.schema(clean.schema).parquet(cleanDir)
@@ -27,7 +70,7 @@ class FlightSessionsSpec extends SparkTestBase {
     q.awaitTermination()
 
     val streamed = spark.table("sessions_stream")
-    val batch = FlightSessions.sessionsBatch(clean)
+    val batch = sessionsBatch(clean)
     val key = Seq("icao24", "session_start", "session_end", "n_states")
 
     assert(streamed.count() > 0)
@@ -37,8 +80,7 @@ class FlightSessionsSpec extends SparkTestBase {
     // completeness for data-closed sessions: any batch session that is
     // FOLLOWED by another session of the same aircraft was closed by
     // data and must have been emitted in-batch
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("icao24").orderBy("session_start")
+    val w = Window.partitionBy("icao24").orderBy("session_start")
     val dataClosed = batch
       .withColumn("nxt", lead("session_start", 1).over(w))
       .filter(col("nxt").isNotNull).drop("nxt")
@@ -85,7 +127,7 @@ class FlightSessionsSpec extends SparkTestBase {
         r.getTimestamp(2).toString, r.getLong(3))).toSet
     // exactly the batch mirror's sessions for key a — the straggler
     // bridged, the backward extension landed, the early row separated
-    val want = FlightSessions.sessionsBatch(
+    val want = sessionsBatch(
       batches.flatten.filter(_._1 == "a").toDF("icao24", "time_position"))
       .collect().map(r => (r.getTimestamp(1).toString,
         r.getTimestamp(2).toString, r.getLong(3))).toSet
@@ -98,8 +140,8 @@ class FlightSessionsSpec extends SparkTestBase {
   test("built-in session_window form ≡ lag-formulation on fixture data") {
     val clean = spark.read.parquet(cleanDir)
     val key = Seq("icao24", "session_start", "session_end", "n_states")
-    val windowed = FlightSessions.sessionsWindowed(clean)
-    val batch = FlightSessions.sessionsBatch(clean)
+    val windowed = sessionsWindowed(clean)
+    val batch = sessionsBatch(clean)
     assert(windowed.count() === batch.count())
     assert(windowed.join(batch, key, "left_anti").count() === 0)
     assert(batch.join(windowed, key, "left_anti").count() === 0)
@@ -111,18 +153,18 @@ class FlightSessionsSpec extends SparkTestBase {
     val atGap = new java.sql.Timestamp(t0.getTime + 30 * 60000L) // exactly 30 min
     val pastGap = new java.sql.Timestamp(atGap.getTime + 1L)     // 30 min + 1 ms
     val boundary = Seq(("k", t0), ("k", atGap)).toDF("icao24", "time_position")
-    assert(FlightSessions.sessionsWindowed(boundary).count() === 1,
+    assert(sessionsWindowed(boundary).count() === 1,
       "session_window touch-merges at distance == gap")
-    assert(FlightSessions.sessionsBatch(boundary).count() === 1,
+    assert(sessionsBatch(boundary).count() === 1,
       "the lag formulation merges at the exact boundary (strict >)")
     val past = Seq(("k", t0), ("k", pastGap)).toDF("icao24", "time_position")
-    assert(FlightSessions.sessionsWindowed(past).count() === 2)
-    assert(FlightSessions.sessionsBatch(past).count() === 2)
+    assert(sessionsWindowed(past).count() === 2)
+    assert(sessionsBatch(past).count() === 2)
   }
 
   test("multi-session aircraft split exactly at the gap threshold") {
     val clean = spark.read.parquet(cleanDir)
-    val batch = FlightSessions.sessionsBatch(clean).collect()
+    val batch = sessionsBatch(clean).collect()
     // fixtures span 2025-11-06..24 with per-day captures: every aircraft
     // seen on two different days must produce >= 2 sessions
     val multiDay = clean.filter(col("icao24").isNotNull && col("time_position").isNotNull)

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.SparkTestBase
 import graft.etl.FlightStates
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.functions._
 
@@ -21,6 +22,18 @@ class FlightStreamSpec extends SparkTestBase {
       StandardCopyOption.REPLACE_EXISTING))
     fs.map(_.getFileName.toString)
   }
+
+  /** Batch mirror of `FlightStream.airborneCountsStream`: the
+    * closed-window subset of the streaming result must equal this on
+    * any static input. */
+  private def airborneCountsBatch(clean: DataFrame): DataFrame =
+    clean
+      .filter(col("on_ground") === false && col("time_position").isNotNull)
+      .groupBy(window(col("time_position"), "1 hour"),
+        col("origin_country"))
+      .agg(count(lit(1)).as("n_states"))
+      .select(col("window.start").as("window_start"),
+        col("origin_country"), col("n_states"))
 
   test("AvailableNow drain stages all files raw-first; checkpoint makes re-runs no-ops") {
     val (raw, rawSink, clean, ckpt) = stageDirs()
@@ -114,7 +127,7 @@ class FlightStreamSpec extends SparkTestBase {
     q.awaitTermination()
 
     val streamed = spark.table("airborne_stream")
-    val batch = FlightStream.airborneCountsBatch(spark.read.parquet(clean))
+    val batch = airborneCountsBatch(spark.read.parquet(clean))
     // append mode emits only windows closed by the final watermark:
     // every streamed row must match batch exactly, and cover all
     // windows strictly below (max event time - 1h) rounded to the hour
@@ -128,45 +141,5 @@ class FlightStreamSpec extends SparkTestBase {
       "every closed batch window must be emitted by the stream")
     assert(streamed.join(batch, key, "left_anti").count() === 0,
       "the stream must never emit a window the batch mirror lacks")
-  }
-
-  test("stream-static enrichment join ≡ batch join, outer rows kept") {
-    import spark.implicits._
-    val (raw, rawSink, clean, ckpt) = stageDirs()
-    copyFixtures(raw, 4)
-    FlightStream.stageAvailableNow(spark, raw, rawSink, clean, ckpt)
-
-    val cleanBatch = spark.read.parquet(clean)
-    // a dim covering SOME of the observed countries, so the outer path
-    // is genuinely exercised
-    val someCountries = cleanBatch.select("origin_country")
-      .filter(col("origin_country").isNotNull)
-      .distinct().limit(3).as[String].collect().toSeq
-    val dim = someCountries.zipWithIndex
-      .map { case (c, i) => (c, s"region_$i") }
-      .toDF("origin_country", "region")
-
-    val cleanStream = spark.readStream
-      .schema(cleanBatch.schema).parquet(clean)
-    val q = FlightStream.enrichStream(cleanStream, dim).writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", tmpDir("enrich-ckpt"))
-      .format("memory").queryName("enriched_stream")
-      .outputMode("append")
-      .start()
-    q.awaitTermination()
-
-    val streamed = spark.table("enriched_stream")
-      .select("icao24", "time_position", "origin_country", "region")
-    val batch = FlightStream.enrichStream(cleanBatch, dim)
-      .select("icao24", "time_position", "origin_country", "region")
-    assert(streamed.count() === cleanBatch.count(),
-      "left join keeps every streamed row")
-    assert(streamed.filter(col("region").isNull).count() > 0,
-      "unmatched countries pass through with null enrichment")
-    // exceptAll, not anti-join: null cells (outer regions, null
-    // timestamps) must compare EQUAL here, and SQL join keys never do
-    assert(batch.exceptAll(streamed).isEmpty && streamed.exceptAll(batch).isEmpty,
-      "streamed enrichment must equal the batch join row-for-row")
   }
 }
